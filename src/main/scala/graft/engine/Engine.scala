@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{SummaryType, TransformSpec}
+import graft.operators.Windows
 import graft.summaries.{Summaries, VectorSummaries}
 
 /** Plan builder: compiles a batch of TransformSpecs over a sequences table
@@ -118,7 +119,7 @@ object Engine {
       inputEnd = inputEnds.map(_ => col("input_end_ns")))
       .drop("input_end_ns")
     val spanned = if (boundaries.nonEmpty)
-      Summaries.withSegment(spanned0, "ts", boundaries)
+      Windows.segment(spanned0, "ts", boundaries)
     else spanned0.withColumn("seg_start", lit(0L))
 
     val groupCols = Seq("doc_id", "transform_id", "seg_start")

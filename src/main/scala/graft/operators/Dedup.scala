@@ -480,25 +480,24 @@ object Dedup {
     corpus.join(pairs.select(col(lCol).as(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
-  /** Pair tables at or below this many rows (with integral, non-null
-    * node ids) are clustered with ONE driver-side union-find pass instead
-    * of the iterative distributed loop: the loop pays ~10 fixed
-    * synchronization barriers (checkpoint + convergence probe per round)
-    * regardless of graph size, which dwarfs the work itself on the small
-    * pair graphs real dedup thresholds produce (guide §1.2: fix the
-    * distributed algorithm first — here the ideal plan for a sub-million-
-    * edge graph is no distribution at all). The limit bounds the driver
-    * collect explicitly: at the 1M default expect a few hundred MB of
-    * TRANSIENT driver footprint (boxed Rows + the labels list), so size
-    * the limit to the driver heap before raising it. Above the limit —
-    * the 100 TB shape — the unchanged distributed rounds run. Set 0 to
-    * disable. */
-  val LocalEdgeLimitKey = "spark.graft.cc.localEdgeLimit"
-  private val localEdgeLimitDefault = 1000000L
+  /** Bytes of driver heap one collected edge costs at the peak of the
+    * union-find branch, worst case (every edge brings two new nodes): the
+    * collected Row, the label map entries of both endpoints and their two
+    * output Rows plus LocalRelation copies, all live when the labels
+    * DataFrame is created (the union-find pass itself peaks lower).
+    * Measured once as the GC'd heap delta at 1M edges (perfect matching)
+    * on JDK 17 / Spark 4.1.2, compressed oops: 496 bytes per edge. */
+  private val bytesPerCollectedEdge = 496L
+
+  /** Edge limit of the driver union-find branch: min(1,000,000, driver
+    * max heap / 4 / [[bytesPerCollectedEdge]]), so the collect peaks at a
+    * quarter of the heap (~2 GB heap or more -> 1M edges). */
+  private def localEdgeLimit: Long =
+    math.min(1000000L, Runtime.getRuntime.maxMemory / 4 / bytesPerCollectedEdge)
 
   /** Driver union-find over collected (a, b) long pairs: returns
     * (node -> min reachable id) for every paired node, exactly the
-    * distributed loop's contract. Path-compressed; O(E α(E)). */
+    * star rounds' contract. Path-compressed; O(E α(E)). */
   private def unionFindMinLabel(
       rows: Array[org.apache.spark.sql.Row]): scala.collection.mutable.LongMap[Long] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -528,167 +527,76 @@ object Dedup {
 
   /** Connected components over a near-dup pair table -> (node, cluster)
     * with cluster = the minimum reachable id; training pipelines dedupe by
-    * keeping one representative per CLUSTER, not per pair. Iterative
-    * min-label propagation: one shuffle per round, converges in
-    * O(component diameter) rounds (near-dup clusters are near-cliques, so
-    * 2-3 in practice); [[connectedComponentsStar]] is the drop-in upgrade
-    * for high-diameter (chain-shaped) pair graphs — same signature, same
-    * (node, cluster=min reachable id) output. Singletons (no pair) are
-    * omitted, matching the pair table's domain.
+    * keeping one representative per CLUSTER, not per pair. Singletons (no
+    * pair) are omitted, matching the pair table's domain; a node seen only
+    * in a self-pair is its own cluster (a, a). A pair with a null endpoint
+    * is dropped: null names no node, so it joins nothing.
     *
-    * Small pair graphs (measured count <= [[LocalEdgeLimitKey]], integral
-    * ids) short-circuit to a driver union-find — identical labels, no
-    * per-round barriers; see the key's doc for the scale rationale. */
+    * Two branches, one contract. Integral ids (both columns the same
+    * byte/short/int/long type) whose measured non-null pair count is at
+    * most [[localEdgeLimit]] are clustered by ONE driver union-find pass:
+    * the distributed rounds pay fixed synchronization barriers per round
+    * regardless of graph size, which dwarfs the work on the small graphs
+    * real dedup thresholds produce. Every other graph — above the limit,
+    * or with non-integral (e.g. string) ids — runs the large-star /
+    * small-star rounds of [[connectedComponentsStar]]. Labels keep the
+    * caller's id type. The pair input is evaluated once on either branch. */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 20): DataFrame = {
-    val sparkS = pairs.sparkSession
-    val dtA = pairs.schema(aCol).dataType
-    val dtB = pairs.schema(bCol).dataType
-    import org.apache.spark.sql.types._
-    val integral = (dtA == dtB) && (dtA match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-    val localLimit = sparkS.conf.getOption(LocalEdgeLimitKey)
-      .map(_.toLong).getOrElse(localEdgeLimitDefault)
-    if (integral && localLimit > 0) {
-      val pc = pairs.select(col(aCol).cast("long").as("a"),
-        col(bCol).cast("long").as("b")).cache()
-      try {
-        val nPairs = pc.count()
-        val rows = if (nPairs <= localLimit) pc.collect() else null
-        if (rows != null && rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-          val labels = unionFindMinLabel(rows)
-          def back(v: Long): Any = dtA match {
-            case LongType => v
-            case IntegerType => v.toInt
-            case ShortType => v.toShort
-            case ByteType => v.toByte
-          }
-          val out = new java.util.ArrayList[org.apache.spark.sql.Row](labels.size)
-          labels.foreach { case (n, c) =>
-            out.add(org.apache.spark.sql.Row(back(n), back(c)))
-          }
-          val schema = StructType(Seq(StructField("node", dtA),
-            StructField("cluster", dtA)))
-          return sparkS.createDataFrame(out, schema)
-        }
-        // over the limit (or null node ids, which the distributed path's
-        // null-grouping semantics own): run the distributed rounds over
-        // the already-cached canonical pair table — the size probe must
-        // not cost the big path a recompute of an expensive pair join —
-        // and cast the labels back to the caller's id type
-        val labeled = connectedComponentsDistributed(pc, "a", "b", maxIter)
-        if (dtA == LongType) labeled
-        else labeled.select(col("node").cast(dtA).as("node"),
-          col("cluster").cast(dtA).as("cluster"))
-      } finally pc.unpersist()
-    } else
-      connectedComponentsDistributed(pairs, aCol, bCol, maxIter)
-  }
+      maxIter: Int = 20): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter, localEdgeLimit)
 
-  /** The iterative distributed min-label loop (the >limit / non-integral
-    * path of [[connectedComponents]]; kept callable for tests). */
-  private[graft] def connectedComponentsDistributed(
+  /** [[connectedComponents]] with an explicit union-find edge limit (0
+    * forces the star branch). */
+  private[graft] def connectedComponents(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 20): DataFrame = {
-    // Checkpointing.materialize (not cache) between rounds: each
-    // iteration's plan embeds TWO copies of the previous one (join +
-    // union), so without lineage truncation the logical plan doubles per
-    // round and the optimizer OOMs by ~iteration 15. Local mode uses
-    // localCheckpoint; set spark.graft.checkpointDir for the RELIABLE
-    // (executor-loss-surviving, resumable) variant on a cluster.
-    // cache the pair table FIRST: the symmetric-closure union below
-    // references it twice, and without this the (possibly expensive)
-    // pair-producing join would be evaluated twice; released as soon as
-    // the edges checkpoint is materialized
-    val p = pairs.select(col(aCol).as("a"), col(bCol).as("b")).cache()
-    var edges = Checkpointing.materialize(
-      p.union(p.select(col("b").as("a"), col("a").as("b"))).distinct())
-    p.unpersist()
-    // size the iteration shuffles from the MEASURED edge count, not the
-    // session default — a 10^4-edge graph should not pay 32-task fixed
-    // costs per round, and a 10^12-edge graph needs more than 32
-    val nEdges = edges.count()
-    val spark = pairs.sparkSession
-    if (nEdges == 0) // no pairs -> no clustered nodes
-      return edges.select(col("a").as("node"), col("a").as("cluster"))
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = math.max(1L, math.min(defaultParts.toLong, nEdges / 100000L + 1)).toInt
-    edges = Checkpointing.materialize(edges.repartition(parts, col("a")))
-    var labels = Checkpointing.materialize(
-      edges.select(col("a").as("node")).distinct()
-        .withColumn("cluster", col("node")))
-    // Convergence probes. Numeric ids use the label-sum invariant: labels
-    // are minima over a monotonically growing reachable set, so per-node
-    // labels only ever DECREASE — the total strictly decreases until
-    // fixpoint, and an unchanged sum proves convergence without a compare
-    // join. Non-numeric ids (strings order lexicographically but don't
-    // sum) fall back to a changed-row count between consecutive rounds —
-    // one extra equi-join per round on the (small) label table.
-    val numericIds = labels.schema("cluster").dataType match {
-      case _: org.apache.spark.sql.types.NumericType => true
+      maxIter: Int,
+      edgeLimit: Long): DataFrame = {
+    import org.apache.spark.sql.types._
+    val dt = pairs.schema(aCol).dataType
+    val integral = dt == pairs.schema(bCol).dataType && (dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
-    }
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("cluster").cast("decimal(38,0)"))).head().getDecimal(0)
-    def changedCount(prev: DataFrame, next: DataFrame): Long =
-      next.join(prev.withColumnRenamed("cluster", "__prev"), Seq("node"))
-        .where(col("cluster") =!= col("__prev")).count()
-    var prevSum = if (numericIds) labelSum(labels) else null
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val neigh = Checkpointing.materialize(edges
-        .join(labels.withColumnRenamed("node", "a"), "a")
-        .select(col("b").as("node"), col("cluster"))
-        .union(labels)
-        .groupBy("node").agg(min("cluster").as("cluster")))
-      // pointer jumping: follow each node's label to THAT node's label
-      // (labels are always existing node ids) — path compression turns
-      // O(diameter) rounds into O(log diameter)
-      val prop = Checkpointing.materialize(neigh
-        .join(neigh.select(col("node").as("cluster"),
-          col("cluster").as("jumped")), Seq("cluster"))
-        .select(col("node"), col("jumped").as("cluster")))
-      if (numericIds) {
-        val s = labelSum(prop)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-      } else {
-        converged = changedCount(labels, prop) == 0
+    })
+    if (!integral) return connectedComponentsStar(pairs, aCol, bCol, maxIter)
+    // cached: the size probe must not cost either branch a recompute of
+    // an expensive pair join
+    val pc = pairs.select(col(aCol).cast("long").as("a"),
+      col(bCol).cast("long").as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull).cache()
+    try {
+      val labels = if (pc.count() > edgeLimit) starRounds(pc, "a", "b", maxIter)._1
+      else {
+        val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+        unionFindMinLabel(pc.collect()).foreach { case (n, c) =>
+          out.add(org.apache.spark.sql.Row(n, c))
+        }
+        pairs.sparkSession.createDataFrame(out, StructType(Seq(
+          StructField("node", LongType), StructField("cluster", LongType))))
       }
-      labels = prop
-      i += 1
-    }
-    // Silent non-convergence would under-merge clusters and feed WRONG
-    // groups to dropNearDuplicates; with pointer jumping 20 rounds cover
-    // component diameters ~2^20, so hitting the cap means something is
-    // genuinely pathological — fail loudly.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds; " +
-        "raise maxIter (labels are still an under-merged over-segmentation)")
-    labels
+      // both branches' labels are checkpointed or local, so releasing
+      // pc afterwards re-evaluates nothing
+      labels.select(col("node").cast(dt).as("node"),
+        col("cluster").cast(dt).as("cluster"))
+    } finally pc.unpersist()
   }
 
   /** Connected components via LARGE-STAR / SMALL-STAR alternation — the
     * two-operation MapReduce algorithm of Kiveris et al., "Connected
-    * Components in MapReduce and Beyond" (SoCC 2014): same signature and
-    * output contract as [[connectedComponents]] (every paired node ->
-    * min reachable id; singletons omitted), different scaling shape.
+    * Components in MapReduce and Beyond" (SoCC 2014): the distributed
+    * branch of [[connectedComponents]], same output contract (every
+    * paired node -> min reachable id; singletons omitted; self-pair-only
+    * nodes label themselves; null-endpoint pairs dropped).
     *
     * Each round rewrites the EDGE set (shrinking toward per-component
     * stars rooted at the minimum id) instead of joining a full label
-    * table against the edge list twice — on a chain-shaped pair graph
-    * (low thresholds, transitive near-dups) min-label's per-round
-    * double-join over all nodes is the bottleneck; the star ops converge
-    * in O(log² n) rounds with per-round work proportional to the
-    * current (shrinking) edge set:
+    * table against the edge list, so per-round work follows the current
+    * (shrinking) edge set and chain-shaped graphs (low thresholds,
+    * transitive near-dups) converge in O(log² n) rounds:
     *
     *   large-star(u): m = min({u} ∪ Γ(u)); emit (v, m) for v ∈ Γ(u), v > u
     *   small-star(u): N = {v ∈ Γ(u) : v < u}, m = min(N);
@@ -698,7 +606,10 @@ object Dedup {
     * stays canonical; the fixpoint is the star graph (v, root) per
     * component. Convergence = unchanged (count, endpoint-hash-sum) edge
     * multiset across one large+small round — both invariants come from
-    * ONE agg on the (small, shrinking) edge table, no compare join. */
+    * ONE agg on the (small, shrinking) edge table, no compare join.
+    * A 4,096-node chain converges in 13 rounds (pinned in CCStarSpec),
+    * inside the default `maxIter` of 20; not converging in `maxIter`
+    * rounds throws (labels would be an under-merged over-segmentation). */
   def connectedComponentsStar(
       pairs: DataFrame,
       aCol: String,
@@ -714,13 +625,17 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxIter: Int = 20): (DataFrame, Int) = {
+    // cached: a reliable checkpoint writes by recomputing its input
     val p = pairs.select(col(aCol).as("x"), col(bCol).as("y"))
-      .where(col("x") =!= col("y")).cache()
-    // canonical (hi, lo) working set
-    var edges = Checkpointing.materialize(
+      .where(col("x").isNotNull && col("y").isNotNull).cache()
+    // canonical (hi, lo) pairs; self-pairs only contribute (a, a) labels
+    val canon = Checkpointing.materialize(
       p.select(greatest(col("x"), col("y")).as("x"),
         least(col("x"), col("y")).as("y")).distinct())
     p.unpersist()
+    val selfLabels = canon.where(col("x") === col("y"))
+      .select(col("x").as("node"), col("y").as("cluster"))
+    var edges = canon.where(col("x") =!= col("y"))
     val spark = pairs.sparkSession
     // TWO independent hash folds (hash(x,y) and hash(y,x)) plus the count:
     // a changed edge multiset that collides one sum while keeping the
@@ -734,14 +649,18 @@ object Dedup {
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     var prev = sig(edges)
-    if (prev._1 == 0)
-      return (edges.select(col("x").as("node"), col("x").as("cluster")), 0)
-    // iteration shuffles sized from the measured edge count (same rule
-    // as the min-label path)
+    if (prev._1 == 0) return (selfLabels, 0)
+    // size the iteration shuffles from the MEASURED edge count, not the
+    // session default — a 10^4-edge graph should not pay 32-task fixed
+    // costs per round, and a 10^12-edge graph needs more than 32
     val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val parts = math.max(1L,
       math.min(defaultParts.toLong, prev._1 / 100000L + 1)).toInt
     edges = Checkpointing.materialize(edges.repartition(parts, col("x")))
+    // Checkpointing.materialize (not cache) after each op: a round's plan
+    // references the previous edge set twice (union + join), so without
+    // lineage truncation the plan doubles per round; set
+    // spark.graft.checkpointDir for the reliable, resumable tier
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -773,12 +692,14 @@ object Dedup {
       i += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds; " +
+      s"connectedComponents did not converge in $maxIter star rounds; " +
         "raise maxIter (edges are not yet per-component stars)")
-    // fixpoint edges are (v, root): emit members + the roots themselves
+    // fixpoint edges are (v, root): emit members + the roots themselves;
+    // min over a self-pair's (a, a) and its component's (a, root) keeps root
     val labels = edges.select(col("x").as("node"), col("y").as("cluster"))
       .union(edges.select(col("y").as("node"), col("y").as("cluster")))
-      .distinct()
+      .union(selfLabels)
+      .groupBy("node").agg(min(col("cluster")).as("cluster"))
     (labels, i)
   }
 

@@ -120,7 +120,8 @@ object Windows {
     // fail-loudly conventions: no silent column clobbering, and the
     // (partition, group) offset collect below is bounded by an explicit
     // guard rather than a comment (see maxOffsetRows)
-    val clash = Seq(outCol, "__pid", "__gcount").filter(df.columns.contains)
+    val clash = Seq(outCol, "__pid", "__gcount", "__opid", "__g", "__offset")
+      .filter(df.columns.contains)
     require(clash.isEmpty,
       s"globalRowNumberByGroup output columns already exist: ${clash.mkString(", ")}")
     val spark = df.sparkSession

@@ -3,10 +3,11 @@ package graft.summaries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model.SummaryType
 
-/** The reference's nine summary reducers with its exact continuous-time
-  * weighting semantics (SURVEY.md §2.4).
+/** The continuous-time span pre-pass of the reference's summary reducers
+  * (SURVEY.md §2.4). The nine reducers themselves run once per group in
+  * [[VectorSummaries.summarizeVector]] (per bin; a scalar feature is a
+  * one-bin array), reached through `Engine.summarize`.
   *
   * Weighting rule (verbatim spec in the reference fixture
   * /root/reference/tests/test-summaries/expected/testplug-curve-vsr-mean.csv:1-11):
@@ -18,11 +19,6 @@ import graft.model.SummaryType
   *
   * Dispatcher in the reference: runner/FeatureExtractionManager.cpp:118-131;
   * always invoked with ContinuousTimeAverage (`:1008,1057`).
-  *
-  * Scale shape: the weight pre-pass is one window over (entity, transform)
-  * — same exchange the summary groupBy needs, so Catalyst plans exactly one
-  * shuffle for pre-pass + all reducers together (mirrors the reference's
-  * one-pass multi-summary evaluation, `:998-1011`).
   */
 object Summaries {
 
@@ -65,160 +61,5 @@ object Summaries {
     features
       .withColumn("w_end", end)
       .withColumn("w", (col("w_end") - col(tsCol)).cast("double"))
-  }
-
-  /** Segment assignment for `--segments`-style summaries
-    * (runner/main.cpp:734-767): seg_start = greatest boundary <= ts, with
-    * everything before the first boundary in a segment starting at 0. */
-  def withSegment(df: DataFrame, tsCol: String, boundaries: Seq[Long]): DataFrame =
-    graft.operators.Windows.segment(df, tsCol, boundaries) // one definition
-
-  /** All nine reducers over a scalar value column, one output row per group,
-    * one shuffle. Median and mode need per-(group, value) pre-aggregation —
-    * still a single logical pipeline: groupBy(value) first (combinable
-    * map-side), then windows over the small aggregated set.
-    *
-    * @param spanned output of [[withSpans]] (must contain `w`)
-    * @param groupCols grouping keys (entity [, transform [, seg_start]])
-    */
-  def summarizeScalar(
-      spanned: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      types: Seq[SummaryType] = SummaryType.all): DataFrame = {
-    val gs = groupCols.map(col)
-    val v = col(valueCol)
-
-    val needMedianMode =
-      types.contains(SummaryType.Median) || types.contains(SummaryType.Mode)
-
-    // basic + moment reducers: one groupBy
-    val aggs = scala.collection.mutable.Buffer.empty[Column]
-    var addedMoments = false
-    types.foreach {
-      case SummaryType.Count => aggs += count(lit(1)).as("count")
-      case SummaryType.Min   => aggs += min(v).as("min")
-      case SummaryType.Max   => aggs += max(v).as("max")
-      case SummaryType.Sum   => aggs += sum(v).as("sum")
-      case SummaryType.Mean  => aggs += (sum(v * col("w")) / sum(col("w"))).as("mean")
-      case SummaryType.Variance | SummaryType.Sd =>
-        if (!addedMoments) { // Variance and Sd share the two moments
-          addedMoments = true
-          aggs += (sum(v * v * col("w")) / sum(col("w"))).as("__ev2")
-          aggs += (sum(v * col("w")) / sum(col("w"))).as("__ev")
-        }
-      case _ => ()
-    }
-    if (aggs.isEmpty) aggs += count(lit(1)).as("__n")
-    var out = spanned.groupBy(gs: _*).agg(aggs.head, aggs.tail.toSeq: _*)
-      .drop("__n")
-    // clamp at 0: E[x^2]-E[x]^2 cancels catastrophically for large means
-    // with tiny spread and can land a hair NEGATIVE -> sd would be NaN
-    val rawVar = col("__ev2") - col("__ev") * col("__ev")
-    if (types.contains(SummaryType.Variance))
-      out = out.withColumn("variance", greatest(lit(0.0), rawVar))
-    if (types.contains(SummaryType.Sd))
-      out = out.withColumn("sd", sqrt(greatest(lit(0.0), rawVar)))
-    out = out.drop("__ev2", "__ev")
-
-    if (needMedianMode) {
-      val byValue = spanned.groupBy(gs :+ v.as("__val"): _*)
-        .agg(sum(col("w")).as("__w"))
-      val wVal = Window.partitionBy(gs: _*).orderBy(col("__val").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(gs: _*)
-      var mm: DataFrame = null
-      if (types.contains(SummaryType.Median)) {
-        mm = byValue
-          .withColumn("__cum", sum(col("__w")).over(wVal))
-          .withColumn("__half", sum(col("__w")).over(wAll) / 2.0)
-          .where(col("__cum") >= col("__half"))
-          .groupBy(gs: _*).agg(min(col("__val")).as("median"))
-      }
-      if (types.contains(SummaryType.Mode)) {
-        val wMode = Window.partitionBy(gs: _*)
-          .orderBy(col("__w").desc, col("__val").asc)
-        val mode = byValue
-          .withColumn("__rn", row_number().over(wMode)).where(col("__rn") === 1)
-          .select(gs :+ col("__val").as("mode"): _*)
-        mm = if (mm == null) mode else nullSafeEquiJoin(mm, mode, groupCols)
-      }
-      out = nullSafeEquiJoin(out, mm, groupCols)
-    }
-    out
-  }
-
-  /** Inner equi-join that MATCHES null keys (using-columns joins compare
-    * with EqualTo, silently dropping null-keyed groups — the result-set
-    * cardinality would depend on which summary types were requested). */
-  private def nullSafeEquiJoin(a: DataFrame, b: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    val bb = keys.foldLeft(b)((df, k) => df.withColumnRenamed(k, s"__r_$k"))
-    val cond = keys.map(k => col(k) <=> col(s"__r_$k")).reduce(_ && _)
-    a.join(bb, cond).drop(keys.map(k => s"__r_$k"): _*)
-  }
-
-  /** Skew-resistant two-stage variant of [[summarizeScalar]] for hot
-    * entities (north_rule salting): stage 1 aggregates mergeable partials
-    * by (groupCols, salt) — a hot key's rows split across `salts` reducers
-    * — stage 2 merges the ≤ salts partials per key. Supports the mergeable
-    * reducers (count/min/max/sum/mean/variance/sd); weighted median/mode
-    * already pre-aggregate by (key, value), which splits hot keys by
-    * construction. Exactly equal to the one-stage plan (tested). */
-  def summarizeScalarSalted(
-      spanned: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      types: Seq[SummaryType] = Seq(SummaryType.Count, SummaryType.Min,
-        SummaryType.Max, SummaryType.Sum, SummaryType.Mean,
-        SummaryType.Variance, SummaryType.Sd),
-      salts: Int = 16): DataFrame = {
-    require(!types.contains(SummaryType.Median) && !types.contains(SummaryType.Mode),
-      "median/mode pre-aggregate by value; use summarizeScalar")
-    val v = col(valueCol)
-    // DETERMINISTIC salt: spark_partition_id/monotonically_increasing_id
-    // are nondeterministic, and a stage retry after partial shuffle fetch
-    // can re-salt recomputed rows differently (the SPARK-23207 class of
-    // double-count/loss). Hash of the full row content is retry-stable;
-    // the one shape it cannot split is a hot key whose rows are all
-    // byte-identical (no deterministic function can).
-    val stage1 = spanned
-      .withColumn("__salt",
-        pmod(hash(spanned.columns.map(col): _*), lit(salts)))
-      .groupBy((groupCols.map(col) :+ col("__salt")): _*)
-      .agg(
-        count(lit(1)).as("__n"),
-        min(v).as("__min"), max(v).as("__max"), sum(v).as("__sum"),
-        sum(col("w")).as("__sw"),
-        sum(v * col("w")).as("__swv"),
-        sum(v * v * col("w")).as("__swv2"))
-    var out = stage1.groupBy(groupCols.map(col): _*)
-      .agg(
-        sum(col("__n")).as("count"),
-        min(col("__min")).as("min"), max(col("__max")).as("max"),
-        sum(col("__sum")).as("sum"),
-        (sum(col("__swv")) / sum(col("__sw"))).as("mean"),
-        greatest(lit(0.0), sum(col("__swv2")) / sum(col("__sw")) -
-          pow(sum(col("__swv")) / sum(col("__sw")), 2)).as("variance"))
-      .withColumn("sd", sqrt(col("variance")))
-    val keep = groupCols ++ types.map(_.name)
-    out.select(keep.map(col): _*)
-  }
-
-  /** Long-format summary rows mirroring the reference's CSV summary layout
-    * (FIXTURES.md §4): one row per group per summary type, with the
-    * reference's label string. */
-  def toSummaryRows(
-      wide: DataFrame,
-      groupCols: Seq[String],
-      types: Seq[SummaryType]): DataFrame = {
-    require(types.nonEmpty, "toSummaryRows needs at least one summary type")
-    val pieces = types.map { t =>
-      wide.select(groupCols.map(col) ++ Seq(
-        lit(t.name).as("summary_name"),
-        col(t.name).cast("double").as("value"),
-        lit(t.label).as("label")): _*)
-    }
-    pieces.reduce(_.unionByName(_))
   }
 }

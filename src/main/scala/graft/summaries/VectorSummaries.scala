@@ -122,8 +122,8 @@ object VectorSummaries {
 
   /** Per-bin continuous-time weighted median + mode. State is one sorted
     * value→span table per bin; suitable when per-bin distinct values are
-    * bounded (e.g. token-derived features). For unbounded-cardinality bins
-    * use the explode + Summaries.summarizeScalar path instead. */
+    * bounded (e.g. token-derived features): state grows with the number
+    * of distinct values per bin per group. */
   class VectorMedianModeAgg extends Aggregator[VW, MMBuf, MedianModeOut] {
 
     def zero: MMBuf = MMBuf(Array.empty, Array.empty)

@@ -126,10 +126,10 @@ object AsOfProps extends Properties("asof") {
       val spanned = graft.summaries.Summaries.withSpans(
         df, "doc_id", transformCol = None, tsCol = "ts",
         inputEnd = Some(lit(end)))
-      val got = graft.summaries.Summaries
-        .summarizeScalar(spanned, Seq("doc_id"), "v",
-          Seq(graft.model.SummaryType.Mean))
-        .select($"mean").as[Double].head()
+      val got = graft.summaries.VectorSummaries
+        .summarizeVector(spanned.withColumn("values", array($"v".cast("float"))),
+          Seq("doc_id"), "values", types = Set(graft.model.SummaryType.Mean))
+        .select($"mean"(0)).as[Double].head()
       // fold: each value spans to the next ts; last spans to `end`
       val spans = rows.zip(rows.drop(1).map(_._1) :+ end)
         .map { case ((t, v), nxt) => (v, (nxt - t).toDouble) }

@@ -5,10 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine.{Main, Engine}
 import graft.functions.Scalars
-import graft.model.SummaryType
 import graft.operators.Multiplex
 import graft.sources.{SequenceGen, Tables}
-import graft.summaries.Summaries
 
 class CliSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -330,26 +328,6 @@ class CliSpec extends AnyFunSuite {
     assert(got.map(_._2).sorted == (0L until 200L))
     assert(got.forall { case (_, p, b) => b == p / 32 })
     assert(got.sortBy(_._2).map(_._1) != (0L until 200L).toSeq)
-  }
-
-  test("salted two-stage aggregation equals the one-stage plan") {
-    val feats = SequenceGen.featureTimeline(spark, 30, 20)
-      .withColumnRenamed("v", "value")
-    val spanned = Summaries.withSpans(feats, "doc_id", None, "ts")
-    val types = Seq(SummaryType.Count, SummaryType.Min, SummaryType.Max,
-      SummaryType.Sum, SummaryType.Mean, SummaryType.Variance, SummaryType.Sd)
-    val plain = Summaries.summarizeScalar(spanned, Seq("doc_id"), "value", types)
-      .orderBy("doc_id").collect()
-    val salted = Summaries.summarizeScalarSalted(spanned, Seq("doc_id"), "value",
-      types, salts = 8).orderBy("doc_id").collect()
-    assert(plain.length == salted.length)
-    plain.zip(salted).foreach { case (p, s) =>
-      types.foreach { t =>
-        val (a, b) = (p.getAs[Any](t.name).toString.toDouble,
-          s.getAs[Any](t.name).toString.toDouble)
-        assert(math.abs(a - b) <= math.abs(a) * 1e-9 + 1e-9, s"${t.name}: $a vs $b")
-      }
-    }
   }
 
   test("scalar functions: hz->midi, frame<->ns, version compare, sanitize") {

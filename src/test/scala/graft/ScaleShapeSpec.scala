@@ -100,21 +100,17 @@ class ScaleShapeSpec extends AnyFunSuite {
   test("reliable checkpoint path (spark.graft.checkpointDir) yields same clusters") {
     val dir = java.nio.file.Files.createTempDirectory("graftchk").toString
     spark.conf.set(Checkpointing.ConfKey, dir)
-    // the small-graph union-find fast path never checkpoints; this test
-    // pins the DISTRIBUTED tier's reliable-checkpoint behavior, so force it
-    spark.conf.set(Dedup.LocalEdgeLimitKey, "0")
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-      val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      // the small-graph union-find branch never checkpoints; edge limit 0
+      // forces the star branch, whose reliable checkpoints this test pins
+      val got = Dedup.connectedComponents(pairs, "id_a", "id_b", 20, 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
       // the reliable checkpoint actually wrote RDD blocks to the dir
       val wrote = new java.io.File(dir).listFiles()
       assert(wrote != null && wrote.nonEmpty, s"nothing checkpointed under $dir")
-    } finally {
-      spark.conf.unset(Checkpointing.ConfKey)
-      spark.conf.unset(Dedup.LocalEdgeLimitKey)
-    }
+    } finally spark.conf.unset(Checkpointing.ConfKey)
   }
 
   test("summarize with inputEnds: single-feature docs span to the input end") {

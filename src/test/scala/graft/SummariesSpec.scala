@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.model.SummaryType
+import graft.engine.Engine
+import graft.model.{SummaryType, TransformSpec}
 import graft.summaries.{Summaries, VectorSummaries}
 
 /** The nine reducers against the reference's own worked examples
@@ -24,23 +25,35 @@ class SummariesSpec extends AnyFunSuite {
     }
     val notes = Seq(("doc", "notes", 6 * S, Some((3.75 * S).toLong), 99.0))
     (curve ++ notes).toDF("doc_id", "transform_id", "ts", "duration", "value")
+      .withColumn("values", array($"value".cast("float")))
   }
+
+  /** The curve values as the float32 feature storage holds them. */
+  private val curve32 = (0 until 10).map(i => (i / 10.0).toFloat.toDouble)
 
   private def summary: Map[String, Double] = {
     val spanned = Summaries.withSpans(fixture, "doc_id", Some("transform_id"),
       "ts", Some("duration"))
       .where($"transform_id" === "curve")
-    val wide = Summaries.summarizeScalar(spanned, Seq("doc_id", "transform_id"), "value")
-    val row = wide.collect().head
-    SummaryType.all.map(t => t.name -> row.getAs[Any](t.name).toString.toDouble).toMap
+    val row = VectorSummaries.summarizeVector(
+      spanned, Seq("doc_id", "transform_id"), "values").collect().head
+    SummaryType.all.map { t =>
+      t.name -> (if (t == SummaryType.Count) row.getAs[Long]("count").toDouble
+        else row.getAs[scala.collection.Seq[Any]](t.name).head.toString.toDouble)
+    }.toMap
   }
+
+  /** Feature rows in `Engine.run`'s layout, for `Engine.summarize`. */
+  private def featureRows =
+    fixture.select($"doc_id", $"transform_id", $"ts", $"duration", $"values")
 
   test("continuous-time reducers match the reference worked examples") {
     val s = summary
     assert(s("count") == 10.0)
     assert(math.abs(s("min") - 0.0) < 1e-9)
     assert(math.abs(s("max") - 0.9) < 1e-9)
-    assert(math.abs(s("sum") - 4.5) < 1e-9)
+    assert(math.abs(s("sum") - curve32.sum) < 1e-9)
+    assert(math.abs(s("sum") - 4.5) < 1e-6)
     // testplug-curve-vsr-mean.csv:12-19 -> 0.553846
     assert(math.abs(s("mean") - 0.5538461538) < 1e-6)
     // testplug-curve-vsr-median.csv:12-16 -> 0.6
@@ -58,11 +71,12 @@ class SummariesSpec extends AnyFunSuite {
     // input end 13.5s: last value 0.9 spans 6.75..13.5 also shifts the mean
     val spanned = Summaries.withSpans(curveOnly, "doc_id", Some("transform_id"),
       "ts", Some("duration"), Some(lit((13.5 * S).toLong)))
-    val wide = Summaries.summarizeScalar(spanned, Seq("doc_id"), "value",
-      Seq(SummaryType.Mean))
-    val mean = wide.collect().head.getAs[Double]("mean")
-    val expected = (3.6 * 0.75 + 0.9 * 6.75) / 13.5
+    val wide = VectorSummaries.summarizeVector(spanned, Seq("doc_id"), "values",
+      types = Set(SummaryType.Mean))
+    val mean = wide.collect().head.getAs[scala.collection.Seq[Double]]("mean").head
+    val expected = (curve32.take(9).sum * 0.75 + curve32(9) * 6.75) / 13.5
     assert(math.abs(mean - expected) < 1e-9)
+    assert(math.abs(mean - (3.6 * 0.75 + 0.9 * 6.75) / 13.5) < 1e-6)
   }
 
   test("vector reducers match scalar reducers per bin") {
@@ -91,7 +105,6 @@ class SummariesSpec extends AnyFunSuite {
     val spanned = Summaries.withSpans(fixture, "doc_id", Some("transform_id"),
       "ts", Some("duration"))
       .where($"transform_id" === "curve")
-      .withColumn("values", array($"value".cast("float")))
     val out = VectorSummaries.summarizeVector(spanned, Seq("doc_id"), "values",
       types = Set(SummaryType.Mean))
     // schema: no median/mode columns materialized
@@ -110,7 +123,6 @@ class SummariesSpec extends AnyFunSuite {
     val spanned = Summaries.withSpans(fixture, "doc_id", Some("transform_id"),
       "ts", Some("duration"))
       .where($"transform_id" === "curve")
-      .withColumn("values", array($"value".cast("float")))
     val out = VectorSummaries.summarizeVector(spanned, Seq("doc_id"), "values",
       types = Set(SummaryType.Median))
     assert(out.columns.toSet == Set("doc_id", "median"))
@@ -150,12 +162,11 @@ class SummariesSpec extends AnyFunSuite {
   }
 
   test("segmented summaries: per-segment counts sum to global count") {
-    val spanned = Summaries.withSpans(fixture, "doc_id", Some("transform_id"),
-      "ts", Some("duration")).where($"transform_id" === "curve")
-    val seg = Summaries.withSegment(spanned, "ts", Seq(2 * S, 5 * S))
-    val wide = Summaries.summarizeScalar(seg, Seq("doc_id", "seg_start"), "value",
-      Seq(SummaryType.Count))
-    val counts = wide.collect().map(r => r.getAs[Long]("seg_start") -> r.getAs[Long]("count")).toMap
+    val specs = Seq(TransformSpec("curve", "graft:energy",
+      summaryType = Some(SummaryType.Count)))
+    val counts = Engine.summarize(featureRows, specs, Seq(2 * S, 5 * S))
+      .collect().map(r => r.getAs[Long]("seg_start_ns") ->
+        r.getAs[scala.collection.Seq[Double]]("values").head.toLong).toMap
     assert(counts.values.sum == 10L)
     assert(counts(0L) == 3)          // ts 0, .75, 1.5
     assert(counts(2 * S) == 4)       // 2.25 3.0 3.75 4.5
@@ -163,12 +174,11 @@ class SummariesSpec extends AnyFunSuite {
   }
 
   test("summary rows carry the reference's label strings") {
-    val spanned = Summaries.withSpans(fixture, "doc_id", Some("transform_id"),
-      "ts", Some("duration")).where($"transform_id" === "curve")
-    val wide = Summaries.summarizeScalar(spanned, Seq("doc_id"), "value",
-      Seq(SummaryType.Mean, SummaryType.Count))
-    val rows = Summaries.toSummaryRows(wide, Seq("doc_id"),
-      Seq(SummaryType.Mean, SummaryType.Count))
+    // one summary type per transform (the reference's transform model)
+    val specs = Seq(
+      TransformSpec("curve", "graft:energy", summaryType = Some(SummaryType.Mean)),
+      TransformSpec("notes", "graft:energy", summaryType = Some(SummaryType.Count)))
+    val rows = Engine.summarize(featureRows, specs)
       .collect().map(r => r.getAs[String]("summary_name") -> r.getAs[String]("label")).toMap
     assert(rows("mean") == "(mean value, continuous-time average)")
     assert(rows("count") == "(count)")

@@ -63,4 +63,14 @@ class WindowsSpec extends AnyFunSuite {
     assert(out(9L) == 5L)
     assert(out(20L) == 10L)
   }
+
+  test("globalRowNumberByGroup rejects inputs carrying its internal columns") {
+    // the offsets join adds __opid/__g/__offset; an input column of the
+    // same name must fail with the crafted message, not an ambiguous
+    // reference deep in the plan
+    val df = Seq((1L, "a", 0), (2L, "a", 0), (3L, "b", 1)).toDF("id", "grp", "__g")
+    val e = intercept[IllegalArgumentException](
+      Windows.globalRowNumberByGroup(df, "grp", "id").collect())
+    assert(e.getMessage.contains("output columns already exist: __g"), e.getMessage)
+  }
 }

@@ -31,13 +31,21 @@ for name in sorted(oracle):
             fail += 1
             continue
 
+        def canon_obj(v):
+            # NULL -> (0,), value -> (1, value): NULL sorts before every
+            # value instead of making sorted() raise TypeError on a
+            # None-vs-str comparison
+            if v is None:
+                return (0,)
+            if isinstance(v, list) or type(v).__name__ == "ndarray":
+                v = tuple(v)
+            return (1, v)
+
         def canon(df):
             df = df.copy()
             for c in df.columns:
                 if df[c].dtype == object:
-                    df[c] = df[c].map(
-                        lambda v: tuple(v) if isinstance(v, (list,)) or
-                        type(v).__name__ == "ndarray" else v)
+                    df[c] = df[c].map(canon_obj)
                 elif df[c].dtype.kind == "f":
                     # stringify the WHOLE column (not just NaN): a mixed
                     # str/float column would make sorted() raise TypeError
