@@ -20,6 +20,10 @@ import graft.summaries.{Summaries, VectorSummaries}
   *      extractor once, then fan the rows out to transforms with a
   *      broadcast join against the tiny (output -> transform) spec table —
   *      a map-side operation, not a second pass.
+  *   3. Stream sharing for summaries: one plugin instance computes every
+  *      requested summary of its output (FeatureExtractionManager.cpp:
+  *      998-1011); [[summarize]] reduces each stream once, not once per
+  *      requested summary type.
   *
   * Output: feature rows
   *   (doc_id, transform_id, output, ts, duration, values, label)
@@ -82,11 +86,19 @@ object Engine {
 
   /** Continuous-time summaries for the specs that request one
     * (vamp:summary_type), over feature rows from [[run]]. Vector-aware
-    * (per-bin reducers) in one shuffle; optional fixed segment boundaries
-    * (ns) for `--segments` semantics. Summary row layout mirrors
-    * FIXTURES.md §4:
+    * (per-bin reducers); optional fixed segment boundaries (ns) for
+    * `--segments` semantics. Summary row layout mirrors FIXTURES.md §4:
     * (doc_id, transform_id, seg_start_ns, seg_duration_ns, summary_name,
-    *  values: array<double>, label). */
+    *  values: array<double>, label).
+    *
+    * Stream sharing: transforms whose specs are equal apart from `id` and
+    * `summaryType` read identical rows from [[run]] (same sharing pass,
+    * output and time range), so they form ONE stream. Each stream is
+    * spanned and reduced once, under its smallest summarizing id, with
+    * the union of its requested reducers; the finished rows then fan out
+    * to every requesting id. Contract: `features` holds [[run]]'s rows
+    * for `specs` — rows that differ between two ids of one stream are
+    * summarized from the representative's rows only. */
   def summarize(
       features: DataFrame,
       specs: Seq[TransformSpec],
@@ -103,7 +115,21 @@ object Engine {
     require(wanted.map(_._1).distinct.size == wanted.size,
       "duplicate transform id with conflicting summary types: " +
         wanted.groupBy(_._1).filter(_._2.size > 1).keys.mkString(", "))
-    val byType = wanted.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+    val types = wanted.map(_._2).toSet
+
+    // An id's rows are fixed by the multiset of its specs up to id and
+    // summary type, so ids with equal multisets are one stream. Copies'
+    // rows are dropped before the span windows; rows of transforms that
+    // request no summary stay, as they still set the entity's last end.
+    val streamOf = specs.groupBy(_.id).view.mapValues(
+      _.groupMapReduce(_.copy(id = "", summaryType = None))(_ => 1)(_ + _)).toMap
+    val repOf = wanted.map(_._1).groupBy(streamOf).values
+      .flatMap(ids => ids.map(_ -> ids.min)).toMap
+    val reps = repOf.values.toSeq.distinct
+    val copies = repOf.collect { case (id, rep) if id != rep => id }.toSeq
+    val streams =
+      if (copies.isEmpty) features
+      else features.where(!col("transform_id").isin(copies: _*))
 
     // Optional (doc_id, transform_id, input_end_ns): the reference rule
     // says the FINAL durationless feature extends to the END OF THE
@@ -111,8 +137,8 @@ object Engine {
     // would summarize to null). The CLI derives it from n_tok; callers
     // that only have the feature table get the last-ending-output rule.
     val featForSpans = inputEnds match {
-      case Some(ie) => features.join(ie, Seq("doc_id", "transform_id"), "left")
-      case None => features
+      case Some(ie) => streams.join(ie, Seq("doc_id", "transform_id"), "left")
+      case None => streams
     }
     val spanned0 = Summaries.withSpans(
       featForSpans, "doc_id", Some("transform_id"), "ts", Some("duration"),
@@ -122,26 +148,24 @@ object Engine {
       Windows.segment(spanned0, "ts", boundaries)
     else spanned0.withColumn("seg_start", lit(0L))
 
-    val groupCols = Seq("doc_id", "transform_id", "seg_start")
-    // Aggregate ONLY the requested reducers: a mean/count request must
-    // not pay the median/mode value-map aggregator's state + merges.
+    // ONE aggregate over the spanned rows, evaluated once: only the
+    // requested reducers (a mean/count request must not pay the
+    // median/mode value-map aggregator's state + merges) see the valued
+    // rows, while the segment end takes every row; a group without
+    // values (an instants output) emits no row.
     val wide = VectorSummaries.summarizeVector(
-      spanned.where(size(col("values")) > 0), groupCols, "values",
-      types = byType.keySet)
-      .join(
-        spanned.groupBy(groupCols.map(col): _*)
-          .agg(max(col("w_end")).as("seg_end")),
-        groupCols)
+      spanned.where(col("transform_id").isin(reps: _*))
+        .withColumn("values", when(size(col("values")) > 0, col("values"))),
+      Seq("doc_id", "transform_id", "seg_start"), "values", types = types,
+      extra = Seq("seg_end" -> max(col("w_end")), "valued" -> count(col("values"))))
+      .where(col("valued") > 0)
 
-    // One pass, no per-type fan-out: each transform requests at most one
-    // summary type, so route rows through a broadcast (transform_id ->
-    // summary) lookup and select the value array with ONE CASE over the
-    // requested types. The vector Aggregator then executes exactly once
-    // per group — the reference's one-pass multi-summary ("a vital
-    // optimisation", FeatureExtractionManager.cpp:229-232, 998-1011). The
-    // previous union-branch shape shared the shuffle write (ReuseExchange)
-    // but re-ran the reduce-side Aggregator merge once per requested type:
-    // a 9-type request paid ~9x reduce CPU.
+    // Fan-out without a per-type union: route each stream's rows through a
+    // broadcast (representative -> transform_id, summary) lookup and
+    // select the value array with ONE CASE over the requested types. The
+    // vector Aggregator then executes exactly once per group — the
+    // reference's one-pass multi-summary ("a vital optimisation",
+    // FeatureExtractionManager.cpp:229-232, 998-1011).
     def valueOf(t: SummaryType): Column = t match {
       case SummaryType.Count => array(col("count").cast("double"))
       case SummaryType.Min => transform(col("min"), _.cast("double"))
@@ -154,14 +178,15 @@ object Engine {
       case SummaryType.Sd => col("sd")
     }
     val typeTable = spark.createDataFrame(
-      wanted.map { case (id, t) => (id, t.name, t.label) })
-      .toDF("transform_id", "summary_name", "label")
-    val branches = byType.keySet.toSeq.sortBy(_.name)
+      wanted.map { case (id, t) => (repOf(id), id, t.name, t.label) })
+      .toDF("rep", "transform_id", "summary_name", "label")
+    val branches = types.toSeq.sortBy(_.name)
     val valueCol = branches.tail
       .foldLeft(when(col("summary_name") === branches.head.name, valueOf(branches.head))) {
         (acc, t) => acc.when(col("summary_name") === t.name, valueOf(t))
       }
-    wide.join(broadcast(typeTable), Seq("transform_id"))
+    wide.withColumnRenamed("transform_id", "rep")
+      .join(broadcast(typeTable), Seq("rep"))
       .select(col("doc_id"), col("transform_id"),
         col("seg_start").as("seg_start_ns"),
         (col("seg_end") - col("seg_start")).as("seg_duration_ns"),

@@ -112,7 +112,13 @@ object Windows {
     * `row_number().over(partitionBy(group))` funnels each group into a
     * single task (the hot-key trap). One range exchange on the order
     * key, per-partition running counts per group, one driver row per
-    * (partition, group), broadcast offsets back. */
+    * (partition, group), broadcast offsets back.
+    *
+    * Memory: each task keeps one running count per distinct group of its
+    * partition (a hash-map entry), so executor memory is O(distinct
+    * groups per partition), independent of the rows per group; the
+    * driver holds one offset row per (partition, group), capped at
+    * `maxOffsetRows`. */
   def globalRowNumberByGroup(df: DataFrame, groupCol: String,
       orderCol: String, outCol: String = "pos"): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}

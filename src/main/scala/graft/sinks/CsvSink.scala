@@ -147,13 +147,14 @@ object CsvSink {
   /** Format summary rows from Engine.summarize. */
   def formatSummaries(summaries: DataFrame, opts: Options): DataFrame = {
     val sep = opts.separator
-    val w = Window.partitionBy(col("transform_id"))
-      .orderBy(col("doc_id"), col("seg_start_ns"), col("summary_name"))
+    // the doc name opens each (doc, transform) block; partitioning by doc
+    // too reuses the summaries' doc_id partitioning (no extra exchange)
+    val w = Window.partitionBy(col("transform_id"), col("doc_id"))
+      .orderBy(col("seg_start_ns"), col("summary_name"))
     val g = gFormat(opts.digits)
     val fileCol =
       if (opts.omitFilename) lit(null).cast("string")
-      else when(lag(col("doc_id"), 1).over(w).isNull ||
-          lag(col("doc_id"), 1).over(w) =!= col("doc_id"),
+      else when(row_number().over(w) === 1,
         concat(lit("\""), col("doc_id"), lit("\""))).otherwise(lit(""))
     val pieces: Seq[Column] = (if (opts.omitFilename) Nil else Seq(fileCol)) ++ Seq(
       secs9(col("seg_start_ns")),

@@ -246,14 +246,17 @@ object VectorSummaries {
     * bin per group, Kryo-serialized on every partial merge — pure waste
     * on the common mean/count path at 10^12 rows). Output columns are
     * the requested subset of: count, min, max, sum, mean, variance, sd,
-    * median, mode (arrays). */
+    * median, mode (arrays), then the `extra` aggregates by name — computed
+    * in the same aggregate, so the caller's input is evaluated once.
+    * The reducers skip rows whose values are null; `extra` still sees them. */
   def summarizeVector(
       spanned: DataFrame,
       groupCols: Seq[String],
       valuesCol: String,
       wCol: String = "w",
       types: Set[SummaryType] = momentTypes ++
-        Set(SummaryType.Median, SummaryType.Mode)): DataFrame = {
+        Set(SummaryType.Median, SummaryType.Mode),
+      extra: Seq[(String, Column)] = Nil): DataFrame = {
     require(types.nonEmpty, "no summary types requested")
     val needMoments = types.exists(momentTypes)
     val needMedMode = types.contains(SummaryType.Median) ||
@@ -266,7 +269,7 @@ object VectorSummaries {
       else None,
       if (needMedMode)
         Some(udaf(new VectorMedianModeAgg, Encoders.product[VW])(vc, wc).as("mm"))
-      else None).flatten
+      else None).flatten ++ extra.map { case (n, c) => c.as(n) }
 
     val momentOuts =
       if (needMoments)
@@ -282,6 +285,6 @@ object VectorSummaries {
 
     spanned.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .select(groupCols.map(col) ++ momentOuts ++ mmOuts: _*)
+      .select(groupCols.map(col) ++ momentOuts ++ mmOuts ++ extra.map(e => col(e._1)): _*)
   }
 }

@@ -229,4 +229,88 @@ class EngineSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[Long]("ts")).toSeq == Seq(0L, 8000000L))
     assert(rows.forall(_.getAs[scala.collection.Seq[Float]]("values").size == 9))
   }
+
+  /** Summary rows as sortable keys plus their value arrays. */
+  private def summaryRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map { r =>
+      (r.getAs[String]("doc_id"), r.getAs[String]("transform_id"),
+        r.getAs[Long]("seg_start_ns"), r.getAs[Long]("seg_duration_ns"),
+        r.getAs[String]("summary_name"), r.getAs[String]("label")) ->
+        r.getAs[scala.collection.Seq[Double]]("values").toSeq
+    }.sortBy(_._1.toString)
+
+  test("summarize over a batch equals the union of per-spec summarize calls") {
+    import SummaryType._
+    val df = TransformSpec(id = "", plugin = "graft:energy", output = "detectionfunction")
+    val grid = TransformSpec(id = "", plugin = "graft:histogram", output = "grid")
+    val specs =
+      // one stream, four summary types (the CLI's --summaries expansion)
+      Seq(Mean, Median, Mode, Sd).map(t => df.copy(id = s"df:${t.name}", summaryType = Some(t))) ++
+      Seq(
+        // differ from df:* only in start/duration: their own streams
+        df.copy(id = "late:mean", start = 100000000L, duration = 250000000L,
+          summaryType = Some(Mean)),
+        df.copy(id = "late:count", start = 100000000L, duration = 250000000L,
+          summaryType = Some(Count)),
+        df.copy(id = "early:mean", start = 0L, duration = 200000000L,
+          summaryType = Some(Mean)),
+        grid.copy(id = "grid:median", summaryType = Some(Median)),
+        grid.copy(id = "grid:max", summaryType = Some(Max)),
+        // instants (no values): must give no rows
+        TransformSpec(id = "clicks:mean", plugin = "graft:clicks", summaryType = Some(Mean)),
+        // requests no summary; its rows still set each doc's last end
+        TransformSpec(id = "regions", plugin = "graft:regions"))
+    for (seed <- Seq(42L, 7L)) {
+      val docs = SequenceGen.generate(spark, 10, maxLen = 512, seed = seed).toDF
+      val feats = Engine.run(docs, specs).localCheckpoint()
+      val ends = docs.select($"doc_id", ($"n_tok".cast("long") * 1000000L + 3000000L)
+        .as("input_end_ns")).crossJoin(specs.map(_.id).toDF("transform_id"))
+      for (bounds <- Seq(Nil, Seq(150000000L, 300000000L));
+           ie <- Seq(None, Some(ends))) {
+        val batch = summaryRows(Engine.summarize(feats, specs, bounds, ie))
+        val single = summaryRows(specs.filter(_.summaryType.nonEmpty)
+          .map(s => Engine.summarize(feats, Seq(s), bounds, ie)).reduce(_ union _))
+        val ctx = s"seed $seed, boundaries $bounds, inputEnds ${ie.nonEmpty}"
+        assert(batch.map(_._1).toSeq == single.map(_._1).toSeq, ctx)
+        batch.zip(single).foreach { case ((k, a), (_, b)) =>
+          assert(a.size == b.size && a.zip(b).forall { case (x, y) =>
+            (x.isNaN && y.isNaN) || math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(y))
+          }, s"$ctx $k: $a vs $b")
+        }
+        val ids = batch.map(_._1._2).toSet
+        assert(!ids.contains("clicks:mean"), ctx)
+        assert(ids.contains("late:mean") && ids.contains("early:mean") && ids.contains("grid:max"), ctx)
+      }
+      // start/duration keep streams apart: the windowed means differ
+      val means = summaryRows(Engine.summarize(feats, specs)).collect {
+        case (k, v) if k._5 == "mean" => (k._1, k._2) -> v
+      }.toMap
+      assert(means.keys.map(_._1).exists(d =>
+        means.get((d, "late:mean")) != means.get((d, "df:mean"))), s"seed $seed")
+    }
+  }
+
+  test("K summary types on one transform feed the reducer N rows, not K*N") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val specs = Seq(SummaryType.Mean, SummaryType.Median, SummaryType.Mode, SummaryType.Sd)
+      .map(t => TransformSpec(id = s"df:${t.name}", plugin = "graft:energy",
+        output = "detectionfunction", summaryType = Some(t)))
+    val feats = Engine.run(seqs, specs).localCheckpoint()
+    val n = feats.where($"transform_id" === "df:mean").count()
+    assert(n > 0 && feats.count() == 4 * n)
+    val sums = Engine.summarize(feats, specs)
+    assert(sums.count() == 4 * feats.select("doc_id").distinct().count())
+    // rows entering every partial aggregate of the executed plan: the
+    // vector reducers and the segment end share one aggregate over one
+    // copy of the stream (a per-copy, two-pass plan would read 8N)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val partials = helper.collect(sums.queryExecution.executedPlan) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.mode == Partial) => a
+    }
+    assert(partials.nonEmpty)
+    assert(partials.map(_.child.execute().count()).sum == n,
+      sums.queryExecution.executedPlan.toString)
+  }
 }

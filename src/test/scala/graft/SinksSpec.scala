@@ -245,6 +245,25 @@ class SinksSpec extends AnyFunSuite {
       "\"docA\",0.000000000,9.750000000,mean,0.553846,\"(mean value, continuous-time average)\"")
   }
 
+  test("summary lines name the doc only on the first line of each (doc, transform)") {
+    val label = "(mean value, continuous-time average)"
+    val rows = for (doc <- Seq("docA", "docB"); t <- Seq("t1", "t2"); seg <- 0 until 3)
+      yield (doc, t, seg * 2 * S, 2 * S, "mean", Seq(seg + 0.5), label)
+    val sums = scala.util.Random.shuffle(rows).toDF("doc_id", "transform_id",
+      "seg_start_ns", "seg_duration_ns", "summary_name", "values", "label")
+      .repartition(3)
+    val lines = CsvSink.formatSummaries(sums, CsvSink.Options())
+      .as[(String, String, Long, String)].collect()
+      .sortBy(l => (l._1, l._2, l._3))
+    assert(lines.length == 12)
+    lines.groupBy(l => (l._1, l._2)).foreach { case ((doc, t), block) =>
+      assert(block.map(_._4).toSeq == Seq(
+        s"\"$doc\",0.000000000,2.000000000,mean,0.5,\"$label\"",
+        s",2.000000000,2.000000000,mean,1.5,\"$label\"",
+        s",4.000000000,2.000000000,mean,2.5,\"$label\""), s"$doc/$t")
+    }
+  }
+
   test("JAMS golden matrix: full documents per output shape") {
     // the per-shape golden table mirroring the reference's
     // tests/test-jams-writer/expected/{instants,curve-fsr,notes-regions,

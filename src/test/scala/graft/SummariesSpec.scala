@@ -174,10 +174,11 @@ class SummariesSpec extends AnyFunSuite {
   }
 
   test("summary rows carry the reference's label strings") {
-    // one summary type per transform (the reference's transform model)
+    // one summary type per transform (the reference's transform model);
+    // "notes" is a notes-regions stream of its own, as its rows differ
     val specs = Seq(
       TransformSpec("curve", "graft:energy", summaryType = Some(SummaryType.Mean)),
-      TransformSpec("notes", "graft:energy", summaryType = Some(SummaryType.Count)))
+      TransformSpec("notes", "graft:regions", summaryType = Some(SummaryType.Count)))
     val rows = Engine.summarize(featureRows, specs)
       .collect().map(r => r.getAs[String]("summary_name") -> r.getAs[String]("label")).toMap
     assert(rows("mean") == "(mean value, continuous-time average)")
