@@ -43,6 +43,11 @@ object Engine {
     registry.values.toSeq.sortBy(_.name).flatMap(e =>
       e.outputs.map(o => s"${e.name}:${o.identifier}"))
 
+  /** The registered extractor named `plugin`; unknown names fail. */
+  def extractor(plugin: String): FeatureExtractor = registry.getOrElse(plugin,
+    throw new IllegalArgumentException(
+      s"unknown plugin: $plugin (available: ${registry.keys.toSeq.sorted.mkString(", ")})"))
+
   /** Run a batch of transforms; one DAG, shared extraction passes. */
   def run(sequences: DataFrame, specs: Seq[TransformSpec]): DataFrame = {
     require(specs.nonEmpty, "no transforms")
@@ -52,9 +57,7 @@ object Engine {
       .sortBy(_._2.map(_.id).min)
 
     val parts = bySharing.map { case (key, group) =>
-      val ex = registry.getOrElse(key.plugin,
-        throw new IllegalArgumentException(
-          s"unknown plugin: ${key.plugin} (available: ${registry.keys.mkString(", ")})"))
+      val ex = extractor(key.plugin)
       val rows = ex.extract(sequences, group.head)
       // fan out to the transforms sharing this pass: tiny broadcast join on
       // output, then the per-transform time-range filter (P2).

@@ -219,11 +219,15 @@ object Main {
       val pluginAndOut = parts(0)
       val idx = pluginAndOut.lastIndexOf(":")
       val (plugin, output) =
-        if (Engine.registry.contains(pluginAndOut)) (pluginAndOut, "")
-        else (pluginAndOut.substring(0, idx), pluginAndOut.substring(idx + 1))
+        if (idx > 0 && !Engine.registry.contains(pluginAndOut) &&
+            Engine.registry.contains(pluginAndOut.substring(0, idx)))
+          (pluginAndOut.substring(0, idx), pluginAndOut.substring(idx + 1))
+        else (pluginAndOut, "")
       graft.model.TransformSpec(id = d, plugin = plugin, output = output)
     }
     val specs0 = fromFiles ++ fromDefault
+    // unknown plugins fail here, before any input is opened
+    specs0.foreach(s => Engine.extractor(s.plugin))
     if (c.summaries.nonEmpty)
       // CLI-wide -S: one summary spec per (transform, type), sharing the
       // transform's extraction pass (FeatureExtractionManager.cpp:998-1011)

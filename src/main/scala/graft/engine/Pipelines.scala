@@ -70,28 +70,26 @@ object Pipelines {
     // ascending ts order, and the query timestamps are array_sort'ed
     // in-row before the explode. AsOfNative.assumeSorted declares that
     // ordering to the planner (skipping two full sorts of the exploded
-    // timelines); the merge VERIFIES the claim row-by-row, so a future
-    // edit breaking the invariant fails loudly (see AssumeOrderedNode).
-    // The inner assumeSorted (on the compact rows) doubles as a
-    // predicate-pushdown BARRIER: InferFiltersFromGenerate adds a
-    // size(child)>0 filter before every explode, and pushdown would
-    // substitute the frame-energy expression into it — evaluating the
-    // frame loop up to 3x per row (the guide §4.4 duplication, in JVM
+    // timelines); each claim checks every row it emits, so a future edit
+    // breaking the invariant fails loudly (see AssumeOrderedNode).
+    // The compact rows sit under a PlanBarrier: InferFiltersFromGenerate
+    // adds a size(child)>0 filter before every explode, and pushdown
+    // would substitute the frame-energy expression into it — evaluating
+    // the frame loop up to 3x per row (the guide §4.4 duplication, in JVM
     // form). Above the barrier the inferred filter tests the already-
     // computed column instead.
-    val compactF = graft.plans.AsOfNative.assumeSorted(seqs
+    val compactF = graft.plans.PlanBarrier(seqs
       .withColumn("df",
         graft.functions.FrameAgg.energy(col("tokens"), step, block))
       .select(col("doc_id"), col("df"))
       .repartition(parts, col("doc_id"))
-      .sortWithinPartitions("doc_id"),
-      "doc_id")
+      .sortWithinPartitions("doc_id"))
     val features = graft.plans.AsOfNative.assumeSorted(compactF
       .select(col("doc_id"), posexplode(col("df")))
       .select(col("doc_id"), (col("pos") * step * 1000000L).as("ts"),
         col("col").as("fv")),
       "doc_id", "ts")
-    val compactQ = graft.plans.AsOfNative.assumeSorted(seqs
+    val compactQ = graft.plans.PlanBarrier(seqs
       .select(col("doc_id"), col("n_tok"))
       .repartition(parts, col("doc_id"))
       .sortWithinPartitions("doc_id")
@@ -99,8 +97,7 @@ object Pipelines {
         array_sort(transform(sequence(lit(0), lit(queriesPerDoc - 1)),
           k => pmod(abs(xxhash64(col("doc_id"), k)),
             greatest(col("n_tok").cast("long"), lit(1L)) * 1000000L)))
-          .as("tsArr")),
-      "doc_id")
+          .as("tsArr")))
     val queries = graft.plans.AsOfNative.assumeSorted(compactQ
       .select(col("doc_id"), explode(col("tsArr")).as("ts")),
       "doc_id", "ts")

@@ -150,8 +150,8 @@ object Queries2 {
 
   // --------------------------------------------------------------- q24
   /** Multimodal plumbing projection: opaque binary payload + typed
-    * metadata (byte length, head byte); the mapPartitions feature-extract
-    * stub lives in graft.operators.Multimodal (tested in ScalaTest). */
+    * metadata (byte length, head byte); the batched media decoders live
+    * in graft.operators.Multimodal (gates q51/q52). */
   def q24Multimodal(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .withColumn("payload", encode(col("text"), "UTF-8"))

@@ -348,8 +348,7 @@ object TransformSpecs {
   /** Default-config skeleton for a plugin (the reference's --skeleton,
     * runner/main.cpp:455-466), emitted as JSON. */
   def skeleton(plugin: String): String = {
-    val ex = Engine.registry.getOrElse(plugin,
-      throw new IllegalArgumentException(s"unknown plugin: $plugin"))
+    val ex = Engine.extractor(plugin)
     val params = ex.defaultParams.map { case (k, v) => s""""$k": $v""" }
       .mkString("{", ", ", "}")
     s"""[{

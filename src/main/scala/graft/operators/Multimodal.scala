@@ -1,24 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders}
 
-/** Multimodal column plumbing: image/audio/video payloads as opaque
-  * `binary` columns with typed metadata, and a batched per-partition
-  * feature-extraction stage.
+/** Multimodal column plumbing: image/audio payloads as opaque `binary`
+  * columns with typed metadata, decoded by batched per-partition stages
+  * (the Scala analog of the mapInPandas batch shape: the decoder sees an
+  * Iterator of rows per partition so it can amortize codec setup).
   *
-  * The general media decode is STUBBED (this container has no image/audio
-  * libraries): [[StubDecoder]] derives deterministic pseudo-features from
-  * the bytes. Everything Spark-side is real and tested — schema, typed
-  * Dataset plumbing, partition-level batching (the Scala analog of
-  * mapInPandas batch shape: the decoder sees an Iterator of rows per
-  * partition so it can amortize model/codec setup), and partitioning
-  * controls for the heavy-decode stage.
-  *
-  * Two REAL codecs exist alongside the stub — [[parsePpm]]/[[decodePpm]]
+  * The codecs are REAL and dependency-free — [[parsePpm]]/[[decodePpm]]
   * (binary PPM images) and [[parseWavPcm16]]/[[decodeWav]] (16-bit PCM
-  * WAV audio) — dependency-free formats that drive the same batched
-  * path on true container bytes (oracle gates q51/q52).
+  * WAV audio) — and drive oracle gates q51/q52 on true container bytes.
   */
 object Multimodal {
 
@@ -26,108 +17,9 @@ object Multimodal {
   case class MediaRow(id: Long, modality: String, payload: Array[Byte],
       width: Int, height: Int)
 
-  case class MediaFeatures(id: Long, modality: String, n_bytes: Int,
-      checksum: Long, features: Array[Float])
-
-  /** The stub decode: REPLACE with a real codec call in production.
-    * Deterministic per byte payload; shaped like an embedding head. */
-  object StubDecoder {
-    val FeatureDim = 8
-    def decode(payload: Array[Byte]): Array[Float] = {
-      // ??? <- real image/audio decode goes here; deterministic fake below
-      val out = new Array[Float](FeatureDim)
-      var i = 0
-      while (i < payload.length) {
-        out(i % FeatureDim) += (payload(i) & 0xff) / 255.0f
-        i += 1
-      }
-      if (payload.length > 0) {
-        var j = 0
-        while (j < FeatureDim) { out(j) /= payload.length; j += 1 }
-      }
-      out
-    }
-    def checksum(payload: Array[Byte]): Long = {
-      var h = 1125899906842597L
-      var i = 0
-      while (i < payload.length) { h = 31 * h + (payload(i) & 0xff); i += 1 }
-      h
-    }
-  }
-
-  /** Heavy-decode stage: batched per partition (setup amortized across the
-    * partition, like mapInPandas); repartition first so decode parallelism
-    * is independent of upstream partitioning. */
-  def extractFeatures(media: Dataset[MediaRow], parallelism: Int = 0): Dataset[MediaFeatures] = {
-    implicit val enc = Encoders.product[MediaFeatures]
-    val in = if (parallelism > 0) media.repartition(parallelism) else media
-    in.mapPartitions { rows =>
-      // per-partition setup would happen here (codec init, model load)
-      rows.map { r =>
-        MediaFeatures(r.id, r.modality, r.payload.length,
-          StubDecoder.checksum(r.payload), StubDecoder.decode(r.payload))
-      }
-    }
-  }
-
-  /** One sampled frame of a media payload. */
-  case class MediaFrame(id: Long, modality: String, frame_idx: Int,
-      frame: Array[Byte])
-
-  /** Frame sampling (video/audio): treat the payload as consecutive
-    * `frameBytes`-sized frames and emit every `every`-th one — one output
-    * row per sampled frame. Array-local per row (no shuffle); batched per
-    * partition like the decode stage. A trailing partial frame is kept
-    * (real decoders pad; the stub keeps the bytes as-is). */
-  def frameSample(media: Dataset[MediaRow], frameBytes: Int,
-      every: Int): Dataset[MediaFrame] = {
-    require(frameBytes > 0 && every > 0)
-    implicit val enc = Encoders.product[MediaFrame]
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val nFrames = (r.payload.length + frameBytes - 1) / frameBytes
-        Iterator.range(0, nFrames).filter(_ % every == 0).map { f =>
-          val from = f * frameBytes
-          val until = math.min(from + frameBytes, r.payload.length)
-          MediaFrame(r.id, r.modality, f,
-            java.util.Arrays.copyOfRange(r.payload, from, until))
-        }
-      }
-    }
-  }
-
-  /** Resize (images): update the typed metadata and transform the payload
-    * to the target pixel count. The pixel transform is STUBBED
-    * (deterministic nearest-neighbour byte subsample standing in for a
-    * real resampler); the schema/plumbing are the real thing. */
-  def resizeStub(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
-    require(w > 0 && h > 0)
-    implicit val enc = Encoders.product[MediaRow]
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val n = w * h
-        val out = new Array[Byte](n)
-        if (r.payload.nonEmpty) {
-          var i = 0
-          while (i < n) {
-            // ??? <- real resampling kernel goes here; NN subsample below
-            out(i) = r.payload((i.toLong * r.payload.length / n).toInt)
-            i += 1
-          }
-        }
-        r.copy(payload = out, width = w, height = h)
-      }
-    }
-  }
-
-  // ----------------------------------------------------- real codecs
-  //
-  // Two REAL (non-stub) media kernels over true bytes — trivial formats
-  // chosen so no external codec library is needed: binary PPM (P6)
-  // images and 16-bit PCM WAV audio. They exercise the batched
-  // mapPartitions path end-to-end on genuine container formats: header
-  // sniffing, whitespace/comment grammar (PPM), chunked RIFF walking
-  // (WAV), payload extraction. Malformed input fails loudly.
+  // Trivial formats, so no external codec library is needed. The parsers
+  // cover header sniffing, the whitespace/comment grammar (PPM) and
+  // chunked RIFF walking (WAV); malformed input fails loudly.
 
   /** A decoded P6 image. */
   case class PpmImage(id: Long, width: Int, height: Int, maxval: Int,
@@ -171,7 +63,7 @@ object Multimodal {
     (w, h, maxval, java.util.Arrays.copyOfRange(payload, i, i + need.toInt))
   }
 
-  /** Distributed P6 decode: batched per partition like [[extractFeatures]]. */
+  /** Distributed P6 decode: batched per partition. */
   def decodePpm(media: Dataset[MediaRow]): Dataset[PpmImage] = {
     implicit val enc = Encoders.product[PpmImage]
     media.mapPartitions { rows =>
@@ -276,17 +168,5 @@ object Multimodal {
     out.put("data".getBytes("US-ASCII")).putInt(dataSize)
     samples.foreach(out.putShort)
     out.array()
-  }
-
-  /** Build a media table from any table with a string payload column —
-    * used by tests and the correctness gate (text bytes stand in for
-    * media bytes; the plumbing is identical). */
-  def fromText(df: DataFrame, idCol: String, textCol: String): Dataset[MediaRow] = {
-    import df.sparkSession.implicits._
-    df.select(col(idCol).cast("long").as("id"),
-      lit("text").as("modality"),
-      encode(col(textCol), "UTF-8").as("payload"),
-      lit(0).as("width"), lit(0).as("height"))
-      .as[MediaRow]
   }
 }

@@ -5,9 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Native Catalyst as-of join: logical node + planner strategy + a
@@ -18,8 +19,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Semantics identical to graft.operators.AsOf.join (property-tested):
   * for each left row, the value columns of the latest right row with
   * rightTs <= leftTs (strict: <) on the same entity, plus matched_ts;
-  * zero temporal leakage by construction — the merge NEVER reads a right
-  * row past the current left timestamp.
+  * zero temporal leakage by construction — the merge NEVER absorbs a
+  * right row past the current left timestamp (rows past the last left
+  * row are read only to drain the input, never matched).
   *
   * Physical properties: both children clustered on the entity key and
   * sorted by (entity, ts) — EnsureRequirements inserts exactly one
@@ -138,7 +140,6 @@ case class AsOfJoinExec(
       case _ => -1
     }
     val entityType = leftEntity.dataType
-    val tsType = leftTs.dataType
     val rValTypes = rightValues.map(_.dataType)
     val carrySchema = rValTypes :+ rightTs.dataType
     val outAttrs = output
@@ -152,8 +153,6 @@ case class AsOfJoinExec(
       val nullCarry = new SpecificInternalRow(carrySchema)
       carrySchema.indices.foreach(nullCarry.setNullAt)
       var carryEntity: Any = null
-      var carryTsNull = true
-      var carryTs = 0L
       var hasCarry = false
       var rHead: InternalRow = null
       var rHeadDone = !rIter.hasNext
@@ -171,53 +170,20 @@ case class AsOfJoinExec(
         }
       }
 
-      // Input-ordering verification: the merge is only correct over
-      // (entity, ts)-sorted children. The planner usually guarantees that
-      // via requiredChildOrdering, but a child may satisfy it through an
-      // ordering-CLAIM node ([[AssumeOrderedExec]]) whose promise the
-      // planner cannot check — so the merge verifies as it streams (one
-      // compare per consumed row, no copies beyond the existing carry)
-      // and throws instead of silently emitting wrong matches.
-      var prevLe: Any = null
-      var prevLtNull = true
-      var prevLt = 0L
-      var haveLPrev = false
-      def orderViolation(side: String, e: Any, t: Any): Nothing =
-        throw new IllegalStateException(
-          s"as-of merge: $side side not sorted by (entity, ts) — saw " +
-            s"($e, $t) after a later row; an ordering claim " +
-            "(AsOfNative.assumeSorted) on unsorted data?")
+      // the merge is only correct over (entity, ts)-sorted children; when a
+      // child's order is a CLAIM, [[AssumeOrderedExec]] verifies it row by
+      // row, so the merge reads both inputs to the end (see the drain below)
       lIter.map { lRow =>
         val le = lRow.get(lEntityIdx, entityType)
         val ltNull = lRow.isNullAt(lTsIdx)
         val lt = if (ltNull) 0L else lRow.getLong(lTsIdx)
-        if (haveLPrev) {
-          val ec = entityOrd(le, prevLe)
-          if (ec < 0 || (ec == 0 && tsCmp(ltNull, lt, prevLtNull, prevLt) < 0))
-            orderViolation("left", le, if (ltNull) null else lt)
-          // copy the held entity only when it CHANGES (same rule as the
-          // carry below) — one clone per entity, not one per left row
-          if (ec != 0) prevLe = InternalRow.copyValue(le)
-        } else prevLe = InternalRow.copyValue(le)
-        prevLtNull = ltNull
-        prevLt = lt
-        haveLPrev = true
         while (!rHeadDone && rightApplies(le, ltNull, lt)) {
           // absorb this right row into the carry (copies — the sorter
-          // reuses row objects); first verify the right stream really is
-          // non-decreasing vs the previous absorbed row
-          val rtNull = rHead.isNullAt(rTsIdx)
-          val rt = if (rtNull) 0L else rHead.getLong(rTsIdx)
+          // reuses row objects); copy the entity only when it CHANGES
+          // (one copy per entity, not one per absorbed row)
           val re = rHead.get(rEntityIdx, entityType)
-          val reCmp = if (hasCarry) entityOrd(re, carryEntity) else 1
-          if (hasCarry &&
-              (reCmp < 0 || (reCmp == 0 &&
-                tsCmp(rtNull, rt, carryTsNull, carryTs) < 0)))
-            orderViolation("right", re, if (rtNull) null else rt)
-          // copy the entity only when it CHANGES (the sorter reuses row
-          // buffers, so a held reference must be a copy — but one copy
-          // per entity, not one per absorbed row)
-          if (reCmp != 0) carryEntity = InternalRow.copyValue(re)
+          if (!hasCarry || entityOrd(re, carryEntity) != 0)
+            carryEntity = InternalRow.copyValue(re)
           var vi = 0
           while (vi < rValIdxArr.length) {
             val ri = rValIdxArr(vi)
@@ -232,10 +198,8 @@ case class AsOfJoinExec(
             }
             vi += 1
           }
-          if (rtNull) carry.setNullAt(carrySchema.length - 1)
-          else carry.setLong(carrySchema.length - 1, rt)
-          carryTsNull = rtNull
-          carryTs = rt
+          if (rHead.isNullAt(rTsIdx)) carry.setNullAt(carrySchema.length - 1)
+          else carry.setLong(carrySchema.length - 1, rHead.getLong(rTsIdx))
           hasCarry = true
           if (rIter.hasNext) rHead = rIter.next() else { rHeadDone = true; rHead = null }
         }
@@ -243,6 +207,11 @@ case class AsOfJoinExec(
         numOutputRows += 1
         if (matches) numMatched += 1
         project(joined(lRow, if (matches) carry else nullCarry))
+      } ++ {
+        // drain: right rows past the last left row are never matched, but
+        // an ordering check below must still see them
+        rIter.foreach(_ => ())
+        Iterator.empty
       }
     }
   }
@@ -253,33 +222,100 @@ case class AsOfJoinExec(
 }
 
 /** Ordering CLAIM: pass-through node declaring that its child's rows are
-  * already sorted by `orderCols` within each partition — problem
-  * knowledge the optimizer cannot derive (guide §8), e.g. "a per-doc
-  * frame array explodes in frame order, so sorting the COMPACT doc rows
-  * by key makes the exploded stream (key, ts)-sorted" — which lets
-  * EnsureRequirements skip a full sort of the exploded timeline.
+  * already sorted by `orderCols` (ascending, nulls first) within each
+  * partition — problem knowledge the optimizer cannot derive (guide §8),
+  * e.g. "a per-doc frame array explodes in frame order, so sorting the
+  * COMPACT doc rows by key makes the exploded stream (key, ts)-sorted" —
+  * which lets EnsureRequirements skip a full sort of the exploded
+  * timeline.
   *
-  * A false claim CANNOT silently corrupt an as-of join: AsOfJoinExec
-  * verifies both input streams' ordering as it merges and throws. */
+  * The claim is verified where it is made: [[AssumeOrderedExec]] checks
+  * every row it emits against the previous one and throws on the first
+  * row out of order. The as-of merge reads both of its inputs to the end,
+  * so a false claim under it fails whenever the join's output is read to
+  * the end; any other consumer (e.g. a sort-merge join) is checked on the
+  * rows it reads. */
 case class AssumeOrderedNode(child: LogicalPlan, orderCols: Seq[Attribute])
-    extends org.apache.spark.sql.catalyst.plans.logical.UnaryNode {
+    extends UnaryNode {
+  require(orderCols.nonEmpty, "an ordering claim needs at least one column")
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(c: LogicalPlan): AssumeOrderedNode =
     copy(child = c)
 }
 
 case class AssumeOrderedExec(child: SparkPlan, orderCols: Seq[Attribute])
-    extends org.apache.spark.sql.execution.UnaryExecNode {
+    extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def outputOrdering: Seq[SortOrder] =
     orderCols.map(a => SortOrder(a, Ascending))
-  override protected def doExecute(): RDD[InternalRow] = child.execute()
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val keyCols = orderCols
+    val childOut = child.output
+    val ordering = new LazilyGeneratedOrdering(outputOrdering, keyCols)
+    val keyTypes = keyCols.map(_.dataType)
+    val show = (key: InternalRow) => key.toSeq(keyTypes).mkString("(", ", ", ")")
+    val claim = keyCols.map(_.name).mkString(", ")
+    child.execute().mapPartitions({ rows =>
+      // the key goes into one of two alternating projections (each reuses
+      // its own output row), so the previous key survives without a copy
+      val keys = Array.fill(2)(UnsafeProjection.create(keyCols, childOut))
+      var prev: InternalRow = null
+      var cur = 0
+      rows.map { row =>
+        val key = keys(cur)(row)
+        if (prev != null && ordering.compare(prev, key) > 0)
+          throw new IllegalStateException(
+            s"ordering claim violated: rows not sorted by ($claim): key " +
+              s"${show(prev)} is followed by ${show(key)} " +
+              "(AsOfNative.assumeSorted on unsorted data?)")
+        prev = key
+        cur ^= 1
+        row
+      }
+    }, preservesPartitioning = true)
+  }
+
   override protected def withNewChildInternal(c: SparkPlan): AssumeOrderedExec =
     copy(child = c)
 }
 
-/** Planner strategy lowering the logical node; injected per-session via
+/** Optimizer BARRIER: a pass-through the optimizer cannot push predicates
+  * through. Use it between an expensive aliased array computation and an
+  * explode: InferFiltersFromGenerate adds a size(child)>0 filter above
+  * every explode, and predicate pushdown substitutes the full expression
+  * into it (evaluating e.g. a frame loop 3x per row); above the barrier
+  * the filter tests the already-computed column. Column pruning still
+  * reaches below it (ColumnPruning prunes under any unary node that
+  * passes its child's output through); PlanFingerprintSpec pins the
+  * ReadSchema of every site. */
+case class PlanBarrierNode(child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override protected def withNewChildInternal(c: LogicalPlan): PlanBarrierNode =
+    copy(child = c)
+}
+
+/** [[PlanBarrierNode]] lowered: the child's rows, partitioning and
+  * ordering, unchanged. */
+case class PlanBarrierExec(child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
+  override protected def withNewChildInternal(c: SparkPlan): PlanBarrierExec =
+    copy(child = c)
+}
+
+object PlanBarrier {
+  def apply(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    AsOfNative.install(spark)
+    Bridge.ofRows(spark, PlanBarrierNode(df.queryExecution.analyzed))
+  }
+}
+
+/** Planner strategy lowering the logical nodes; injected per-session via
   * spark.experimental.extraStrategies (no session-construction-time
   * extension needed). */
 object AsOfJoinStrategy extends SparkStrategy {
@@ -290,23 +326,8 @@ object AsOfJoinStrategy extends SparkStrategy {
         planLater(n.left), planLater(n.right)) :: Nil
     case n: AssumeOrderedNode =>
       AssumeOrderedExec(planLater(n.child), n.orderCols) :: Nil
+    case n: PlanBarrierNode => PlanBarrierExec(planLater(n.child)) :: Nil
     case _ => Nil
-  }
-}
-
-/** Optimizer BARRIER: [[AssumeOrderedNode]] with no ordering claim — a
-  * pass-through the optimizer cannot push predicates or pruning through.
-  * Use it between an expensive aliased array computation and an explode:
-  * InferFiltersFromGenerate adds a size(child)>0 filter above every
-  * explode, and predicate pushdown substitutes the full expression into
-  * it (evaluating e.g. a frame loop 3x per row); above the barrier the
-  * filter tests the already-computed column. Project exactly the needed
-  * columns BELOW the barrier — column pruning stops at it too. */
-object PlanBarrier {
-  def apply(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    AsOfNative.install(spark)
-    Bridge.ofRows(spark, AssumeOrderedNode(df.queryExecution.analyzed, Nil))
   }
 }
 
@@ -319,10 +340,13 @@ object AsOfNative {
       spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
   }
 
-  /** Declare `df` already sorted by `cols` within each partition (see
-    * [[AssumeOrderedNode]]); feed the result to [[join]] to skip the
-    * planner's sort on that side. The claim is VERIFIED row-by-row by
-    * the merge — unsorted data fails loudly, never silently. */
+  /** Declare `df` already sorted by `cols` (ascending, nulls first)
+    * within each partition (see [[AssumeOrderedNode]]); feed the result
+    * to [[join]] to skip the planner's sort on that side. Every row the
+    * claim emits is checked against the previous one, and unsorted data
+    * fails loudly. [[join]] reads both inputs to the end, so under it the
+    * whole claimed input is checked; any other consumer is checked only
+    * on the rows it reads. */
   def assumeSorted(df: DataFrame, cols: String*): DataFrame = {
     val spark = df.sparkSession
     install(spark)

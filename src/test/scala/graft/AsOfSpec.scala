@@ -142,21 +142,85 @@ class AsOfSpec extends AnyFunSuite {
     assert(claimed == plain)
   }
 
-  test("a FALSE assumeSorted claim fails loudly, never silently") {
-    // deliberately unsorted feature stream in one partition; both sides
-    // single-partition so EnsureRequirements inserts no exchange (which
-    // would re-sort and mask the false claim)
-    val fdf = Seq(("a", 9L, 1.0), ("a", 1L, 2.0), ("a", 5L, 3.0))
-      .toDF("doc_id", "ts", "fv").coalesce(1)
-    val qdf = Seq(("a", 10L), ("a", 11L)).toDF("doc_id", "ts").coalesce(1)
-    val joined = graft.plans.AsOfNative.join(qdf,
-      graft.plans.AsOfNative.assumeSorted(fdf, "doc_id", "ts"),
-      "doc_id", "ts", Seq("fv"))
-    val e = intercept[org.apache.spark.SparkException] { joined.collect() }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("not sorted by (entity, ts)")),
+  /** The messages of `t` and all its causes (task failures arrive wrapped). */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+
+  /** Run `df` and assert it fails with the ordering-violation error of a
+    * claim on `cols`. */
+  private def assertClaimViolated(df: org.apache.spark.sql.DataFrame,
+      cols: String): Unit = {
+    val e = intercept[org.apache.spark.SparkException] { df.collect() }
+    assert(msgs(e).exists(_.contains(s"not sorted by ($cols)")),
       s"expected ordering-violation error, got: ${msgs(e)}")
+  }
+
+  /** Native as-of over single-partition sides, so EnsureRequirements
+    * inserts no exchange (which would re-sort and mask a false claim). */
+  private def claimedJoin(qs: Seq[(String, Long)], fs: Seq[(String, Long, Double)],
+      claimQueries: Boolean, claimFeatures: Boolean) = {
+    import graft.plans.AsOfNative
+    val qdf = qs.toDF("doc_id", "ts").coalesce(1)
+    val fdf = fs.toDF("doc_id", "ts", "fv").coalesce(1)
+    AsOfNative.join(
+      if (claimQueries) AsOfNative.assumeSorted(qdf, "doc_id", "ts") else qdf,
+      if (claimFeatures) AsOfNative.assumeSorted(fdf, "doc_id", "ts") else fdf,
+      "doc_id", "ts", Seq("fv"))
+  }
+
+  test("a FALSE assumeSorted claim fails loudly, never silently") {
+    // deliberately unsorted feature stream in one partition
+    assertClaimViolated(claimedJoin(Seq(("a", 10L), ("a", 11L)),
+      Seq(("a", 9L, 1.0), ("a", 1L, 2.0), ("a", 5L, 3.0)),
+      claimQueries = false, claimFeatures = true), "doc_id, ts")
+    // deliberately unsorted query stream; the features are planner-sorted
+    assertClaimViolated(claimedJoin(Seq(("a", 11L), ("a", 10L)),
+      Seq(("a", 1L, 1.0), ("a", 5L, 2.0)),
+      claimQueries = true, claimFeatures = false), "doc_id, ts")
+    // a claim must name at least one column
+    intercept[IllegalArgumentException] {
+      graft.plans.AsOfNative.assumeSorted(Seq(1).toDF("k"))
+    }
+  }
+
+  test("a false claim on right rows the merge never matches still fails") {
+    // the unsorted right rows all lie past the only left row: a merge that
+    // stops reading at the last left row would return a silent no-match
+    // where (a, 1) is the right answer
+    assertClaimViolated(claimedJoin(Seq(("a", 3L)),
+      Seq(("a", 5L, 1.0), ("a", 1L, 2.0)),
+      claimQueries = false, claimFeatures = true), "doc_id, ts")
+  }
+
+  test("a false claim out of order across entities fails") {
+    // (b, 1) before (a, 1): entity order broken, the (a, 1) match lost
+    assertClaimViolated(claimedJoin(Seq(("a", 2L)),
+      Seq(("b", 1L, 1.0), ("a", 1L, 2.0)),
+      claimQueries = false, claimFeatures = true), "doc_id, ts")
+  }
+
+  test("a false assumeSorted claim under a sort-merge join fails loudly") {
+    import graft.plans.AsOfNative
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      // same repartition(n, key) on both sides: co-partitioned, so the
+      // planner adds no exchange, and the claims satisfy the join's
+      // required ordering, so it adds no sort either
+      val l = AsOfNative.assumeSorted(Seq(("b", 1), ("a", 2), ("c", 3))
+        .toDF("k", "lv").repartition(1, $"k"), "k")
+      val r = AsOfNative.assumeSorted(Seq(("a", 4), ("b", 5), ("c", 6))
+        .toDF("k2", "rv").repartition(1, $"k2"), "k2")
+      val joined = l.join(r, $"k" === $"k2", "full_outer")
+      val fp = graft.engine.PlanFingerprint.of(joined)
+      assert(fp.sortMergeJoins == 1 && fp.sorts == 0,
+        s"expected an SMJ that trusts the claims, got ${fp.json}")
+      assertClaimViolated(joined, "k")
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("native as-of handles NULL entity keys like the window rewrite (no NPE)") {

@@ -154,43 +154,6 @@ class CheckpointStreamSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[Long]("n")).sum == 3)
   }
 
-  test("multimodal plumbing: binary payload, batched decode stub, schema") {
-    val docs = Seq((1L, "hello world"), (2L, "")).toDF("doc_id", "text")
-    val media = Multimodal.fromText(docs, "doc_id", "text")
-    assert(media.schema("payload").dataType.typeName == "binary")
-    val feats = Multimodal.extractFeatures(media, parallelism = 2).collect()
-      .map(f => f.id -> f).toMap
-    assert(feats(1L).n_bytes == 11)
-    assert(feats(1L).features.length == Multimodal.StubDecoder.FeatureDim)
-    assert(feats(2L).n_bytes == 0)
-    // deterministic: same payload -> same checksum/features
-    val again = Multimodal.extractFeatures(media).collect().map(f => f.id -> f).toMap
-    assert(again(1L).checksum == feats(1L).checksum)
-    assert(again(1L).features.toSeq == feats(1L).features.toSeq)
-  }
-
-  test("multimodal frame sampling and resize keep schema + determinism") {
-    val docs = Seq((1L, "abcdefghij"), (2L, "xy")).toDF("doc_id", "text")
-    val media = Multimodal.fromText(docs, "doc_id", "text")
-    // 10 bytes -> frames of 3 (sizes 3,3,3,1); every 2nd -> idx 0 and 2
-    val frames = Multimodal.frameSample(media.filter(_.id == 1L), 3, 2)
-      .collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 2))
-    assert(new String(frames(0).frame) == "abc")
-    assert(new String(frames(1).frame) == "ghi")
-    // trailing partial frame is kept when sampled
-    val all = Multimodal.frameSample(media.filter(_.id == 1L), 3, 1).collect()
-    assert(all.length == 4 && all.map(_.frame.length).sum == 10)
-    // resize: metadata typed, payload at target size, deterministic
-    val resized = Multimodal.resizeStub(media, 4, 2).collect().map(r => r.id -> r).toMap
-    assert(resized(1L).width == 4 && resized(1L).height == 2)
-    assert(resized(1L).payload.length == 8)
-    val again = Multimodal.resizeStub(media, 4, 2).collect().map(r => r.id -> r).toMap
-    assert(again(1L).payload.toSeq == resized(1L).payload.toSeq)
-    // empty payload stays empty-but-shaped
-    assert(resized(2L).payload.length == 8 || resized(2L).payload.isEmpty)
-  }
-
   test("REAL PPM codec: header grammar, comments, round trip, loud failures") {
     val px = Array.tabulate(2 * 3 * 3)(i => (i * 11 % 256).toByte)
     // hand-built header with a comment line and multi-space separators —

@@ -370,6 +370,27 @@ class CliSpec extends AnyFunSuite {
       "<feature><timestamp>1.500000000</timestamp><values>1.5</values><label>a&lt;b&amp;c</label></feature>")
   }
 
+  test("--default-transform: unknown plugins fail before the input is opened") {
+    // the input path does not exist: the plugin error must come first
+    val missing = tmp("graftdmissing") + "/no-such-seqs"
+    Seq("foo" -> "foo", "graft:nope" -> "graft:nope",
+        "graft:energyy:onsets" -> "graft:energyy:onsets").foreach {
+      case (d, named) =>
+        val e = intercept[IllegalArgumentException] {
+          Main.run(spark, Main.parseArgs(Seq("--input", missing,
+            "--default-transform", d, "--output", tmp("graftdout") + "/o")))
+        }
+        assert(e.getMessage.contains(s"unknown plugin: $named (available: "),
+          e.getMessage)
+    }
+    // known plugin, with and without an output
+    val specs = Main.loadSpecs(Main.parseArgs(Seq(
+      "--default-transform", "graft:energy:onsets")))
+    assert(specs.map(s => (s.plugin, s.output)) == Seq(("graft:energy", "onsets")))
+    assert(Main.loadSpecs(Main.parseArgs(Seq("--default-transform",
+      "graft:clicks"))).map(s => (s.plugin, s.output)) == Seq(("graft:clicks", "")))
+  }
+
   test("--list and unknown plugin errors") {
     assert(Engine.list.contains("graft:histogram:grid"))
     val e = intercept[IllegalArgumentException] {

@@ -1,8 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{PlanFingerprint, PlanProbes, Queries, Queries3,
-  Queries5, Queries6}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.lit
+import graft.engine.{ChangepointsExtractor, ClicksExtractor, EnergyExtractor,
+  Pipelines, PlanFingerprint, PlanProbes, Queries, Queries3, Queries5,
+  Queries6, RegionsExtractor, SpectrumExtractor}
+import graft.model.TransformSpec
+import graft.sources.SequenceGen
 
 /** Plan-shape regression net over the heavy gate chains (VERDICT r4 #3):
   * the scale-safety claims — capped bucket equi-joins, native one-pass
@@ -108,5 +114,60 @@ class PlanFingerprintSpec extends AnyFunSuite {
     val fp = PlanFingerprint.of(Queries.q2AsofJoin(spark, dir))
     info(s"q2: ${fp.json}")
     assert(fp.cartesians == 0 && fp.broadcastNLJoins == 0)
+  }
+
+  /** A sequences table on parquet with one extra wide column no pipeline
+    * reads: a scan that reads it has lost its column pruning. */
+  private lazy val wideSeqs: DataFrame = {
+    val p = java.nio.file.Files.createTempDirectory("graftwide").toString + "/seqs"
+    SequenceGen.generate(spark, 40, seed = 3L).toDF()
+      .withColumn("wide", lit("w" * 256)).write.parquet(p)
+    spark.read.parquet(p)
+  }
+
+  /** The distinct ReadSchemas (sorted field names) of the parquet scans in
+    * `df`'s plan. */
+  private def readSchemas(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.requiredSchema.fieldNames.sorted.mkString(",")
+    }.distinct.sorted
+
+  test("every PlanBarrier site reads only the columns it uses") {
+    // column pruning must reach the scan through each barrier: the sites
+    // are the five barrier extractors and the bench pipeline's two
+    // compact-row sides
+    val dt = "doc_id,tokens"
+    val dtn = "doc_id,n_tok,tokens"
+    val sites: Seq[(String, DataFrame, Seq[String])] = Seq(
+      EnergyExtractor -> dt, SpectrumExtractor -> dt, RegionsExtractor -> dtn,
+      ClicksExtractor -> dtn, ChangepointsExtractor -> dtn).map { case (ex, cols) =>
+        (ex.name, ex.extract(wideSeqs, TransformSpec(id = "t", plugin = ex.name)),
+          Seq(cols))
+      } :+ (("asofFeaturePipelineNativeOver",
+        Pipelines.asofFeaturePipelineNativeOver(wideSeqs),
+        Seq("doc_id,n_tok", dt)))
+    sites.foreach { case (name, df, expected) =>
+      assert(readSchemas(df) == expected, s"$name: ReadSchema widened")
+    }
+  }
+
+  test("bench as-of pipeline: two exchanges, two compact-row sorts, one as-of") {
+    // the frozen headline and the asof_features workload run this plan;
+    // the sorts are on the compact per-doc rows, the exploded timelines
+    // stream into the as-of unsorted by the planner (ordering claims)
+    val fp = PlanFingerprint.of(Pipelines.asofFeaturePipelineNativeOver(wideSeqs))
+    info(s"asofFeaturePipelineNativeOver: ${fp.json}")
+    assert(fp == PlanFingerprint(exchanges = 2, sorts = 2,
+      broadcastHashJoins = 0, broadcastNLJoins = 0, sortMergeJoins = 0,
+      cartesians = 0, asofNative = 1, wholeStageCodegen = 0), fp.json)
+    // the initial adaptive plan has no codegen stages yet: count them on
+    // the non-adaptive plan, where every non-codegen node splits a stage
+    val key = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val stages = try PlanFingerprint.of(
+      Pipelines.asofFeaturePipelineNativeOver(wideSeqs)).wholeStageCodegen
+    finally spark.conf.set(key, saved)
+    assert(stages == 6, s"codegen stages: $stages")
   }
 }
