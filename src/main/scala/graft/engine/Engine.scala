@@ -76,7 +76,9 @@ object Engine {
       // unconsumed ones only at RUNTIME — the literal isin folds to false
       // inside dead union branches, so Catalyst prunes them at plan time
       // (a single-output transform no longer pays the other outputs'
-      // extraction work). The join below makes it semantically a no-op.
+      // extraction work). Outputs that one pass emits together (energy's
+      // curve and onsets) are filtered at runtime instead. The join below
+      // makes it semantically a no-op.
       val consumed = consumers.map(_._2).distinct
       rows.where(col("output").isin(consumed: _*))
         .join(broadcast(specTable), Seq("output"))

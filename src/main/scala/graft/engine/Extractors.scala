@@ -105,34 +105,30 @@ object EnergyExtractor extends FeatureExtractor {
     // onsets derive from the same array. PlanBarrier: without it the
     // explode's inferred size()>0 filter re-evaluates the frame loop
     // (guide §4.4 duplication — see the node's doc).
+    val df = col("df")
     val withDf = graft.plans.PlanBarrier(seqs.select(col("doc_id"),
       graft.functions.FrameAgg.energy(col("tokens"), step, block,
         Some(Framing.taperCoefficients(spec.windowType, block).toSeq))
         .as("df")))
-    val curve = withDf
-      .select(col("doc_id"), posexplode(col("df")))
-      .select(col("doc_id"), lit("detectionfunction").as("output"),
-        posToNs(col("pos") * step, rate).as("ts"),
-        lit(null).cast("long").as("duration"),
-        array(col("col").cast("float")).as("values"),
-        lit("").as("label"))
-    // onset: frame energy exceeds threshold and previous frame by sensitivity%
-    // (guarded: sequence(1, 0) would be descending; ANSI element_at is strict)
-    val onsets = withDf
-      .withColumn("onset_frames",
-        when(size(col("df")) > 1,
-          filter(sequence(lit(1), size(col("df")) - 1), i =>
-            (element_at(col("df"), i + 1) > thr) &&
-              (element_at(col("df"), i + 1) >
-                element_at(col("df"), i) * (1.0 + sens / 100.0))))
-          .otherwise(array().cast("array<integer>")))
-      .select(col("doc_id"), explode(col("onset_frames")).as("f"))
-      .select(col("doc_id"), lit("onsets").as("output"),
-        posToNs(col("f") * step, rate).as("ts"),
-        lit(null).cast("long").as("duration"),
-        array().cast("array<float>").as("values"),
-        lit("onset").as("label"))
-    curve.unionByName(onsets)
+    // Both outputs come from ONE pass over the frames (a union of two
+    // branches would scan the sequences and run the frame loop twice):
+    // every frame emits its curve row, and an onset frame also emits its
+    // onset row. Onset: frame energy exceeds threshold and the previous
+    // frame by sensitivity%. Plain expressions, no lambdas, so the whole
+    // chain compiles to code.
+    val e = col("e")
+    val isOnset = col("pos") >= 1 && e > thr &&
+      e > get(df, col("pos") - 1) * (1.0 + sens / 100.0)
+    val ts = posToNs(col("pos") * step, rate)
+    val curve = featRow("detectionfunction", ts, lit(null).cast("long"),
+      array(e.cast("float")), lit(""))
+    val onset = featRow("onsets", ts, lit(null).cast("long"),
+      array().cast("array<float>"), lit("onset"))
+    withDf.select(col("doc_id"), df, posexplode(df).as(Seq("pos", "e")))
+      .select(col("doc_id"),
+        explode(when(isOnset, array(curve, onset)).otherwise(array(curve))).as("r"))
+      .select(col("doc_id"), col("r.output"), col("r.ts"), col("r.duration"),
+        col("r.values"), col("r.label"))
   }
 }
 

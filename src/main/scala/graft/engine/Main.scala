@@ -25,8 +25,11 @@ import graft.sources.Tables
   *     [--list] [--skeleton PLUGIN]
   *
   * Construction order mirrors the reference lifecycle (SURVEY.md §3):
-  * parse CLI -> writer pre-flight -> source expansion -> transform
-  * compile -> one shared-scan DAG -> extract -> summaries -> flush.
+  * parse CLI -> writer pre-flight -> transform compile -> source
+  * expansion -> one shared-scan DAG -> extract -> summaries -> flush.
+  * A run that writes features AND summaries (no --summary-only, no
+  * --checkpoint-buckets) materializes the extracted features once and
+  * feeds both sinks from those rows.
   */
 object Main {
 
@@ -314,6 +317,15 @@ object Main {
         .drop("__peak")
     }
     val wantSummaries = specs.exists(_.summaryType.nonEmpty)
+    // Catalyst does not fuse separate actions: a run that writes the
+    // features AND summarizes them would extract every sharing pass twice.
+    // Materialize once and feed both sinks the same rows, as the
+    // reference feeds its writers and summarizer from one block loop
+    // (FeatureExtractionManager.cpp:943-1011). Not in bucket mode: each
+    // bucket's job must compute only its own docs, or a resumed run would
+    // redo every bucket inside bucket 0's job.
+    if (!c.summaryOnly && wantSummaries && c.checkpointBuckets == 0)
+      features = graft.operators.Checkpointing.materialize(features)
 
     // per-(doc, transform) end of input in ns (n_tok positions at the
     // spec's rate): the reference's file duration / end-of-input rule.

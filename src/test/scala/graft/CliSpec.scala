@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.engine.{Main, Engine}
 import graft.functions.Scalars
 import graft.operators.Multiplex
+import graft.sinks.CsvSink
 import graft.sources.{SequenceGen, Tables}
 
 class CliSpec extends AnyFunSuite {
@@ -96,6 +100,88 @@ class CliSpec extends AnyFunSuite {
     assert(graft.engine.Checkpoint.manifest(out).size == 3)
     Main.run(spark, cfg) // re-run: all buckets skipped, no error
     assert(spark.read.parquet(s"$out/data").count() == 9) // 3 + 6 clicks
+  }
+
+  /** Energy curve + onsets (one sharing pass) and a histogram grid. */
+  private def annotateTransforms(): String = {
+    val tf = tmp("grafttfa") + "/t.json"
+    Files.writeString(Paths.get(tf),
+      """[{"id": "df", "plugin": "graft:energy", "output": "detectionfunction"},
+        | {"id": "on", "plugin": "graft:energy", "output": "onsets"},
+        | {"id": "grid", "plugin": "graft:histogram", "output": "grid"}]""".stripMargin)
+    tf
+  }
+
+  private def bytes(path: String): Seq[Byte] = Files.readAllBytes(Paths.get(path)).toSeq
+
+  test("a run that writes features and summaries reads its input 3 times") {
+    // one energy pass, one histogram pass and the input-ends scan: the
+    // feature sink and the summaries share one extraction
+    val scanned = new java.util.concurrent.atomic.AtomicLong
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.endsWith(inputPath)) =>
+            s.metrics("numOutputRows").value
+        }.foreach(scanned.addAndGet)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Main.run(spark, Main.parseArgs(Seq(
+        "--input", inputPath, "--transforms", annotateTransforms(),
+        "--summaries", "mean,sd", "--writer", "parquet",
+        "--output", tmp("graftscan") + "/feat")))
+      org.apache.spark.grafttest.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(scanned.get == 3L * 20, s"input rows read: ${scanned.get}")
+  }
+
+  test("features + summaries: same summaries as --summary-only, features as Engine.run") {
+    val tf = annotateTransforms()
+    def args(out: String, more: String*) = Main.parseArgs(Seq(
+      "--input", inputPath, "--transforms", tf, "--summaries", "mean,sd",
+      "--output", out) ++ more)
+    val sumsOnly = tmp("graftso") + "/sums.csv"
+    Main.run(spark, args(sumsOnly, "--summary-only", "--writer", "csv", "--one-file"))
+    val cfg = args("unused")
+    val expected = Engine.run(Tables.sequences(spark, inputPath), Main.loadSpecs(cfg))
+      .withColumn("doc_id", col("doc_id").cast("string"))
+    val cols = Seq("doc_id", "transform_id", "output", "ts", "duration", "values", "label")
+
+    val pq = tmp("graftpq") + "/feat"
+    Main.run(spark, args(pq, "--writer", "parquet"))
+    assert(bytes(pq + "_summaries.csv") == bytes(sumsOnly))
+    val written = spark.read.parquet(pq).select(cols.map(col): _*)
+    val want = expected.select(cols.map(col): _*)
+    assert(written.count() == want.count())
+    assert(written.exceptAll(want).isEmpty && want.exceptAll(written).isEmpty)
+
+    val csv = tmp("graftcsv") + "/feat.csv"
+    Main.run(spark, args(csv, "--writer", "csv", "--one-file"))
+    assert(bytes(csv.stripSuffix(".csv") + "_summaries.csv") == bytes(sumsOnly))
+    val lines = scala.jdk.CollectionConverters.ListHasAsScala(
+      Files.readAllLines(Paths.get(csv))).asScala.toSeq
+    val wantLines = CsvSink.formatFeatures(expected, cfg.csv)
+      .select("line").as[String].collect().toSeq
+    assert(lines.nonEmpty && lines.sorted == wantLines.sorted)
+  }
+
+  test("bucketed parquet run writes the same summaries as an unbucketed one") {
+    val tf = tmp("grafttfb") + "/t.json"
+    Files.writeString(Paths.get(tf),
+      """[{"id": "df", "plugin": "graft:energy", "output": "detectionfunction"}]""")
+    def run(out: String, more: String*): Unit = Main.run(spark, Main.parseArgs(Seq(
+      "--input", inputPath, "--transforms", tf, "--summaries", "mean",
+      "--writer", "parquet", "--output", out) ++ more))
+    val plain = tmp("graftnb") + "/feat"
+    val bucketed = tmp("graftb") + "/feat"
+    run(plain)
+    run(bucketed, "--checkpoint-buckets", "3")
+    assert(graft.engine.Checkpoint.manifest(bucketed).size == 3)
+    val sums = bytes(bucketed + "_summaries.csv")
+    assert(sums.nonEmpty && sums == bytes(plain + "_summaries.csv"))
   }
 
   test("--multiplex collapses all inputs into one mixed sequence") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import graft.engine.{Engine, TransformSpecs}
 import graft.model.{SummaryType, TransformSpec}
@@ -45,6 +47,12 @@ class EngineSpec extends AnyFunSuite {
     // sharing group (the spec fan-out is a broadcast join, not a re-scan)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
+    // one scan leaf of the cached sequences: the shared pass emits both
+    // outputs from one walk over the frames, not from one union branch each
+    val scans = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+      case s: InMemoryTableScanExec => s
+    }
+    assert(scans.size == 1, s"scans of the cached sequences: ${scans.size}")
   }
 
   test("time-range filter (start/duration) trims features") {
