@@ -14,9 +14,11 @@ import graft.functions.{FrameAgg, GFormat, IntersectCount, TokenHistogram, VecDo
   * Injects:
   *   - the as-of planner strategy (graft.plans.AsOfJoinStrategy), so
   *     AsOfJoinNode lowers to the single-pass sort-merge-carry exec;
-  *   - SQL bindings for the native expressions, making them usable from
-  *     `spark.sql(...)` (the reference's plugin-registry analog for SQL
-  *     users): vec_dot, intersect_count, frame_energy, frame_mean.
+  *   - a SQL binding for every native expression in graft.functions,
+  *     making them usable from `spark.sql(...)` (the reference's
+  *     plugin-registry analog for SQL users): the 14 names in
+  *     [[GraftExtensions.functions]] (FrameAgg backs both frame_energy
+  *     and frame_mean).
   *
   * `GraftExtensions.register(spark)` applies the same set to an ALREADY
   * RUNNING session (extensions are otherwise builder-time only). */
@@ -41,11 +43,16 @@ object GraftExtensions {
     case _ => throw new IllegalArgumentException(s"$what must be a literal int")
   }
 
-  private def fn(name: String, usage: String)(
-      builder: Seq[Expression] => Expression) =
+  /** One registry entry; `build` sees exactly `arity` arguments. */
+  private def fn(name: String, arity: Int, usage: String)(
+      build: Seq[Expression] => Expression) =
     (FunctionIdentifier(name),
       new ExpressionInfo("graft", name, usage),
-      builder)
+      (args: Seq[Expression]) =>
+        if (args.length == arity) build(args)
+        else throw new IllegalArgumentException(
+          s"$name takes $arity argument${if (arity == 1) "" else "s"}, " +
+            s"got ${args.length}"))
 
   /** SQL-surface coercion (the built-ins get this via private
     * ImplicitCastInputTypes): cast e.g. array<decimal> literals to the
@@ -68,35 +75,27 @@ object GraftExtensions {
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    fn("vec_dot", "vec_dot(a, b) - dot product of two array<double>") {
+    fn("vec_dot", 2, "vec_dot(a, b) - dot product of two array<double>") {
       case Seq(a, b) => VecDot(asArrayOf(a, DoubleType), asArrayOf(b, DoubleType))
-      case args => throw new IllegalArgumentException(
-        s"vec_dot takes 2 arguments, got ${args.length}")
     },
-    fn("intersect_count",
+    fn("intersect_count", 2,
       "intersect_count(a, b) - common-element count of sorted distinct array<bigint>") {
       case Seq(a, b) =>
         IntersectCount(asArrayOf(a, LongType), asArrayOf(b, LongType))
-      case args => throw new IllegalArgumentException(
-        s"intersect_count takes 2 arguments, got ${args.length}")
     },
-    fn("frame_energy",
+    fn("frame_energy", 3,
       "frame_energy(tokens, step, block) - per-frame mean square over array<int>") {
       case Seq(t, s, b) =>
         FrameAgg(asArrayOf(t, IntegerType),
           intArg(s, "step"), intArg(b, "block"), "energy")
-      case args => throw new IllegalArgumentException(
-        s"frame_energy takes 3 arguments, got ${args.length}")
     },
-    fn("frame_mean",
+    fn("frame_mean", 3,
       "frame_mean(tokens, step, block) - per-frame mean over array<int>") {
       case Seq(t, s, b) =>
         FrameAgg(asArrayOf(t, IntegerType),
           intArg(s, "step"), intArg(b, "block"), "mean")
-      case args => throw new IllegalArgumentException(
-        s"frame_mean takes 3 arguments, got ${args.length}")
     },
-    fn("frame_spectrum",
+    fn("frame_spectrum", 4,
       "frame_spectrum(tokens, step, block, window) - per-frame tapered " +
         "DFT magnitude spectra (block/2+1 bins) over array<int>") {
       case Seq(t, s, b, w) =>
@@ -110,78 +109,59 @@ object GraftExtensions {
         val (cre, cim) = SpectrumExtractor.dftCoefficients(shape, block)
         graft.functions.FrameSpectrum(asArrayOf(t, IntegerType),
           intArg(s, "step"), block, cre, cim)
-      case args => throw new IllegalArgumentException(
-        s"frame_spectrum takes 4 arguments, got ${args.length}")
     },
-    fn("token_histogram",
-      "token_histogram(tokens, k) - per-bucket counts (token mod k) over array<int>") {
+    fn("token_histogram", 2,
+      "token_histogram(tokens, k) - per-bucket counts (token mod k) over " +
+        "array<int>; NULL if any token is NULL") {
       case Seq(t, k) => TokenHistogram(asArrayOf(t, IntegerType), intArg(k, "k"))
-      case args => throw new IllegalArgumentException(
-        s"token_histogram takes 2 arguments, got ${args.length}")
     },
-    fn("hyperplane_sig",
+    fn("hyperplane_sig", 3,
       "hyperplane_sig(v, dim, nPlanes) - LSH sign-bit bucket of array<double>") {
       case Seq(v, d, p) =>
         graft.functions.HyperplaneSig(asArrayOf(v, DoubleType),
           graft.operators.Similarity.planeMatrix(intArg(d, "dim"), intArg(p, "nPlanes")))
-      case args => throw new IllegalArgumentException(
-        s"hyperplane_sig takes 3 arguments, got ${args.length}")
     },
-    fn("minhash_sig",
+    fn("minhash_sig", 2,
       "minhash_sig(tokens, h) - minhash signature (shared affine hash " +
         "family) over array<int>") {
       case Seq(t, h) =>
         graft.functions.MinhashSig(asArrayOf(t, IntegerType), intArg(h, "h"))
-      case args => throw new IllegalArgumentException(
-        s"minhash_sig takes 2 arguments, got ${args.length}")
     },
-    fn("simhash32",
+    fn("simhash32", 1,
       "simhash32(tokens) - 32-bit simhash (Knuth multiplicative family) " +
         "over array<int>. NULL tokens are SKIPPED (they contribute to no " +
         "bit); the repo's own tables carry containsNull=false arrays, but " +
         "external data with null elements hashes as if those elements " +
         "were absent") {
       case Seq(t) => graft.functions.Simhash32(asArrayOf(t, IntegerType))
-      case args => throw new IllegalArgumentException(
-        s"simhash32 takes 1 argument, got ${args.length}")
     },
-    fn("ngram_shingles",
+    fn("ngram_shingles", 2,
       "ngram_shingles(tokens, n) - sorted distinct base-1031-packed " +
         "n-gram shingle ids over array<int>") {
       case Seq(t, n) =>
         graft.functions.NgramShingles(asArrayOf(t, IntegerType), intArg(n, "n"))
-      case args => throw new IllegalArgumentException(
-        s"ngram_shingles takes 2 arguments, got ${args.length}")
     },
-    fn("ngram_repetition",
+    fn("ngram_repetition", 2,
       "ngram_repetition(tokens, n) - struct(total, distinct, top) window " +
         "counts for repetition quality signals over array<int>") {
       case Seq(t, n) =>
         graft.functions.NgramRepetitionStats(asArrayOf(t, IntegerType),
           intArg(n, "n"))
-      case args => throw new IllegalArgumentException(
-        s"ngram_repetition takes 2 arguments, got ${args.length}")
     },
-    fn("slot_agree",
+    fn("slot_agree", 2,
       "slot_agree(a, b) - count of positions where two array<bigint> " +
         "signatures agree") {
       case Seq(a, b) =>
         graft.functions.SlotAgree(asArrayOf(a, LongType), asArrayOf(b, LongType))
-      case args => throw new IllegalArgumentException(
-        s"slot_agree takes 2 arguments, got ${args.length}")
     },
-    fn("fingerprint64",
+    fn("fingerprint64", 1,
       "fingerprint64(tokens) - rolling polynomial document fingerprint " +
         "over array<int>") {
       case Seq(t) => graft.functions.Fingerprint64(asArrayOf(t, IntegerType))
-      case args => throw new IllegalArgumentException(
-        s"fingerprint64 takes 1 argument, got ${args.length}")
     },
-    fn("g_format",
+    fn("g_format", 2,
       "g_format(v, digits) - C %g significant-digit formatting of float/double") {
       case Seq(v, d) => GFormat(asDouble(v), intArg(d, "digits"))
-      case args => throw new IllegalArgumentException(
-        s"g_format takes 2 arguments, got ${args.length}")
     })
 
   /** Apply strategy + SQL functions to a live session (idempotent). */

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -20,57 +19,35 @@ import org.apache.spark.sql.graftbridge.Bridge
   * matches Spark's Remainder (sign of dividend) — acc stays in
   * [0, P) for non-negative tokens either way.
   */
-case class Fingerprint64(child: Expression) extends UnaryExpression {
+case class Fingerprint64(child: Expression) extends UnaryKernel[ArrayData] {
+  import Fingerprint64._
 
-  private val P = 1000000007L
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"fingerprint64 needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "fingerprint64"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     var acc = 0L
     var i = 0
     while (i < n) {
       if (arr.isNullAt(i)) return null // NULL element poisons the fold
-      acc = (acc * 31L + arr.getInt(i)) % P
+      acc = (acc * Base + arr.getInt(i)) % P
       i += 1
     }
-    acc
+    java.lang.Long.valueOf(acc)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $c.numElements();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($c.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $acc = ($acc * 31L + $c.getInt($i)) % ${P}L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Fingerprint64 =
     copy(child = newChild)
 }
 
 object Fingerprint64 {
+  final val P = 1000000007L
+  final val Base = 31L
+
   /** Column API: fingerprint64(tokens) -> bigint. */
   def apply(tokens: Column): Column =
     Bridge.column(Fingerprint64(Bridge.expression(tokens)))

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -24,19 +23,12 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 case class FrameAgg(child: Expression, step: Int, block: Int, kind: String,
     taper: Option[Seq[Double]] = None)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(step > 0 && block > 0, "step/block must be positive")
   require(Seq("mean", "energy").contains(kind), s"unknown frame agg kind: $kind")
   require(taper.forall(_.length == block), "taper length must equal block")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"frame_agg needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = s"frame_$kind"
 
@@ -44,9 +36,9 @@ case class FrameAgg(child: Expression, step: Int, block: Int, kind: String,
 
   override def nullable: Boolean = true // null elements -> null result
 
-  /** shared by eval and codegen (via reference object): the frame loop.
-    * Null result on any null element (VecDot convention): unboxing a
-    * null token to 0 would fabricate plausible frame values. */
+  /** The frame loop. Null result on any null element (VecDot
+    * convention): unboxing a null token to 0 would fabricate plausible
+    * frame values. */
   def compute(arr: ArrayData): GenericArrayData = {
     val n = arr.numElements()
     var p = 0
@@ -69,18 +61,6 @@ case class FrameAgg(child: Expression, step: Int, block: Int, kind: String,
       f += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("frameAgg", this, classOf[FrameAgg].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value}_r =
-        $self.compute($c);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r; }""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): FrameAgg =

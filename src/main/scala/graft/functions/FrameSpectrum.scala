@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -34,21 +33,14 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 case class FrameSpectrum(child: Expression, step: Int, block: Int,
     cre: Seq[Seq[Double]], cim: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(step > 0 && block > 0, "step/block must be positive")
   require(cre.nonEmpty && cre.length == cim.length,
     "cre/cim must have the same (nonzero) bin count")
   require(cre.forall(_.length == block) && cim.forall(_.length == block),
     "coefficient rows must have length block")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"frame_spectrum needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType =
     ArrayType(ArrayType(FloatType, containsNull = false), containsNull = false)
   override def nullable: Boolean = true // null elements -> null result
@@ -59,10 +51,9 @@ case class FrameSpectrum(child: Expression, step: Int, block: Int,
   @transient private lazy val cimArr: Array[Array[Double]] =
     cim.map(_.toArray).toArray
 
-  /** shared by eval and codegen (via reference object): the frame loop.
-    * Returns null (whole result) if any element is null — the VecDot
-    * convention; silently unboxing a null token to 0 would fabricate a
-    * plausible spectrum. */
+  /** The frame loop. Returns null (whole result) if any element is
+    * null — the VecDot convention; silently unboxing a null token to 0
+    * would fabricate a plausible spectrum. */
   def compute(arr: ArrayData): GenericArrayData = {
     val n = arr.numElements()
     var p = 0
@@ -92,19 +83,6 @@ case class FrameSpectrum(child: Expression, step: Int, block: Int,
       f += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("frameSpectrum", this,
-      classOf[FrameSpectrum].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value}_r =
-        $self.compute($c);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r; }""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): FrameSpectrum =

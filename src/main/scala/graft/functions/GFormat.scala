@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
@@ -18,30 +16,20 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Java `%.Ng` with C-style mantissa zero-trimming in both fixed and
   * exponent form, NaN/Inf -> "NaN"/"Inf"/"-Inf". Null in -> null out
   * (the sink wraps with coalesce(..., "") like the old UDF did). */
-case class GFormat(child: Expression, digits: Int) extends UnaryExpression {
+case class GFormat(child: Expression, digits: Int) extends UnaryKernel[Any] {
   require(digits > 0 && digits <= 17, s"digits out of range: $digits")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case FloatType | DoubleType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"g_format needs float/double, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(FloatType, DoubleType)
   override def dataType: DataType = StringType
   override def prettyName: String = "g_format"
 
-  /** shared by eval and codegen (via reference object). */
-  def fmt(v: Double): UTF8String =
-    UTF8String.fromString(graft.sinks.CsvSink.gFormatValue(v, digits))
-
-  override def nullSafeEval(input: Any): Any = input match {
-    case f: java.lang.Float => fmt(f.toDouble)
-    case d: java.lang.Double => fmt(d)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("gfmt", this, classOf[GFormat].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.fmt((double) $c);")
+  /** Generated code passes the primitive float/double boxed. */
+  def compute(v: Any): Any = {
+    val d = v match {
+      case f: java.lang.Float => f.doubleValue
+      case d: java.lang.Double => d.doubleValue
+    }
+    UTF8String.fromString(graft.sinks.CsvSink.gFormatValue(d, digits))
   }
 
   override protected def withNewChildInternal(newChild: Expression): GFormat =

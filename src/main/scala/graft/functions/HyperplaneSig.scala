@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -25,14 +23,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Malformed vectors (length ≠ dim, or any null element) get signature
   * 0L, matching the HOF form where a null dot product set no bits. */
 case class HyperplaneSig(child: Expression, coeffs: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"hyperplane_sig needs array<double>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = LongType
   override def prettyName: String = "hyperplane_sig"
 
@@ -41,8 +34,7 @@ case class HyperplaneSig(child: Expression, coeffs: Seq[Seq[Double]])
   @transient private lazy val dim: Int =
     if (coeffs.isEmpty) 0 else coeffs.head.length
 
-  /** shared by eval and codegen (via reference object). */
-  def compute(v: ArrayData): Long = {
+  def compute(v: ArrayData): java.lang.Long = {
     val n = v.numElements()
     if (n != dim) return 0L
     var i = 0
@@ -57,15 +49,7 @@ case class HyperplaneSig(child: Expression, coeffs: Seq[Seq[Double]])
       if (d >= 0) sig |= (1L << p)
       p += 1
     }
-    sig
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("hpSig", this, classOf[HyperplaneSig].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
+    java.lang.Long.valueOf(sig)
   }
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -17,26 +16,17 @@ import org.apache.spark.sql.graftbridge.Bridge
   * is a linear merge in codegen. Union size follows arithmetically
   * (|A| + |B| - |A∩B|), so jaccard needs no union array either. */
 case class IntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"intersect_count needs array<bigint> x array<bigint>, got " +
-            s"${l.catalogString} x ${r.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
   override def prettyName: String = "intersect_count"
 
-  /** shared by eval and codegen (via reference object). Lengths MAY
-    * differ (set semantics); a null element — which array_sort places
-    * LAST, so an O(1) tail check suffices — makes the result NULL,
-    * surfacing corrupt shingle sets instead of under-counting. */
+  /** Lengths MAY differ (set semantics); a null element — which
+    * array_sort places LAST, so an O(1) tail check suffices — makes the
+    * result NULL, surfacing corrupt shingle sets instead of
+    * under-counting. */
   def compute(a: ArrayData, b: ArrayData): java.lang.Integer = {
     val na = a.numElements(); val nb = b.numElements()
     if ((na > 0 && a.isNullAt(na - 1)) || (nb > 0 && b.isNullAt(nb - 1)))
@@ -49,17 +39,6 @@ case class IntersectCount(left: Expression, right: Expression)
       else j += 1
     }
     java.lang.Integer.valueOf(c)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("ic", this, classOf[IntersectCount].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Integer ${ev.value}_r = $self.compute($a, $b);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.intValue(); }""")
   }
 
   override protected def withNewChildrenInternal(

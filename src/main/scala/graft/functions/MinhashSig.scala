@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -27,25 +26,15 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Spark's Remainder and the oracle's `%`.
   */
 case class MinhashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(numHashes > 0, "numHashes must be positive")
 
-  private val P = 1000000007L
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sig needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_sig"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): GenericArrayData = {
     val n = arr.numElements()
     val mins = new Array[Long](numHashes)
     java.util.Arrays.fill(mins, Long.MaxValue)
@@ -57,7 +46,7 @@ case class MinhashSig(child: Expression, numHashes: Int)
         any = true
         var h = 0
         while (h < numHashes) {
-          val v = ((2L * h + 1) * t + (h.toLong * h + 7)) % P
+          val v = ((2L * h + 1) * t + (h.toLong * h + 7)) % MinhashSig.P
           if (v < mins(h)) mins(h) = v
           h += 1
         }
@@ -68,40 +57,13 @@ case class MinhashSig(child: Expression, numHashes: Int)
     else new GenericArrayData(new Array[Any](numHashes)) // H null entries
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val mins = ctx.freshName("mins")
-      val any = ctx.freshName("any")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val t = ctx.freshName("t")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $c.numElements();
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |boolean $any = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($c.isNullAt($i)) continue;
-         |  long $t = (long) $c.getInt($i);
-         |  $any = true;
-         |  for (int $h = 0; $h < $numHashes; $h++) {
-         |    long $v = ((2L * $h + 1) * $t + ((long) $h * $h + 7)) % ${P}L;
-         |    if ($v < $mins[$h]) $mins[$h] = $v;
-         |  }
-         |}
-         |${ev.value} = $any
-         |  ? new org.apache.spark.sql.catalyst.util.GenericArrayData($mins)
-         |  : new org.apache.spark.sql.catalyst.util.GenericArrayData(new Object[$numHashes]);
-       """.stripMargin
-    })
-
   override protected def withNewChildInternal(newChild: Expression): MinhashSig =
     copy(child = newChild)
 }
 
 object MinhashSig {
+  final val P = 1000000007L
+
   /** Column API: minhash_sig(tokens, H) -> array<long>[H]. */
   def apply(tokens: Column, numHashes: Int): Column =
     Bridge.column(MinhashSig(Bridge.expression(tokens), numHashes))

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -23,33 +22,30 @@ import org.apache.spark.sql.graftbridge.Bridge
   * last (array_sort's null placement); fewer than n tokens -> empty set
   * (the HOF required a size guard; this is total). NULL input -> NULL.
   */
-case class NgramShingles(child: Expression, n: Int) extends UnaryExpression {
+case class NgramShingles(child: Expression, n: Int) extends UnaryKernel[ArrayData] {
   require(n > 0, "n must be positive")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_shingles needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "ngram_shingles"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    new GenericArrayData(NgramShingles.pack(arr, n))
+  /** Sorted distinct packed windows, one trailing null if any window
+    * contained a null token. */
+  def compute(arr: ArrayData): GenericArrayData = {
+    val vals = NgramShingles.sortedWindows(arr, n)
+    val anyNull = vals.length < arr.numElements() - n + 1
+    var d = 0
+    var k = 0
+    while (k < vals.length) {
+      if (d == 0 || vals(k) != vals(d - 1)) { vals(d) = vals(k); d += 1 }
+      k += 1
+    }
+    val out = new Array[Any](d + (if (anyNull) 1 else 0))
+    var o = 0
+    while (o < d) { out(o) = vals(o); o += 1 }
+    new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.NgramShingles.pack($c, $n));
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): NgramShingles =
     copy(child = newChild)
@@ -67,17 +63,10 @@ case class NgramShingles(child: Expression, n: Int) extends UnaryExpression {
   * fewer than n tokens -> (0, 0, 0); NULL input -> NULL.
   */
 case class NgramRepetitionStats(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(n > 0, "n must be positive")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_repetition needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = StructType(Seq(
     StructField("total", IntegerType, nullable = false),
     StructField("distinct", IntegerType, nullable = false),
@@ -85,82 +74,42 @@ case class NgramRepetitionStats(child: Expression, n: Int)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "ngram_repetition"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val s = NgramRepetitionStats.stats(arr, n)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](s(0), s(1), s(2)))
+  /** (total non-null windows, distinct, top multiplicity). */
+  def compute(arr: ArrayData): GenericInternalRow = {
+    val vals = NgramShingles.sortedWindows(arr, n)
+    var distinct = 0
+    var top = 0
+    var run = 0
+    var k = 0
+    while (k < vals.length) {
+      if (k == 0 || vals(k) != vals(k - 1)) { distinct += 1; run = 1 }
+      else run += 1
+      if (run > top) top = run
+      k += 1
+    }
+    new GenericInternalRow(Array[Any](vals.length, distinct, top))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("stats")
-      s"""
-         |int[] $s = graft.functions.NgramRepetitionStats.stats($c, $n);
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] {
-         |    java.lang.Integer.valueOf($s[0]),
-         |    java.lang.Integer.valueOf($s[1]),
-         |    java.lang.Integer.valueOf($s[2]) });
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): NgramRepetitionStats =
     copy(child = newChild)
 }
 
 object NgramRepetitionStats {
-
-  /** Shared kernel: (total non-null windows, distinct, top multiplicity). */
-  def stats(arr: ArrayData, n: Int): Array[Int] = {
-    val len = arr.numElements()
-    val windows = len - n + 1
-    if (windows <= 0) return Array(0, 0, 0)
-    val vals = new Array[Long](windows)
-    var m = 0
-    var i = 0
-    while (i < windows) {
-      var v = 0L
-      var nul = false
-      var j = 0
-      while (j < n && !nul) {
-        if (arr.isNullAt(i + j)) nul = true
-        else v = v * 1031L + arr.getInt(i + j)
-        j += 1
-      }
-      if (!nul) { vals(m) = v; m += 1 }
-      i += 1
-    }
-    java.util.Arrays.sort(vals, 0, m)
-    var distinct = 0
-    var top = 0
-    var run = 0
-    var k = 0
-    while (k < m) {
-      if (k == 0 || vals(k) != vals(k - 1)) { distinct += 1; run = 1 }
-      else run += 1
-      if (run > top) top = run
-      k += 1
-    }
-    Array(m, distinct, top)
-  }
-
   /** Column API: ngram_repetition(tokens, n) -> struct(total, distinct, top). */
   def apply(tokens: Column, n: Int): Column =
     Bridge.column(NgramRepetitionStats(Bridge.expression(tokens), n))
 }
 
 object NgramShingles {
+  final val Base = 1031L
 
-  /** Shared kernel (interpreted + codegen paths): sorted distinct packed
-    * windows, one trailing null if any window contained a null token. */
-  def pack(arr: ArrayData, n: Int): Array[Any] = {
-    val len = arr.numElements()
-    val windows = len - n + 1
-    if (windows <= 0) return new Array[Any](0)
+  /** The base-1031 packing of every n-window of `arr` that holds no null
+    * token, sorted — shared by both n-gram expressions. Shorter than the
+    * window count exactly when some window held a null. */
+  private[functions] def sortedWindows(arr: ArrayData, n: Int): Array[Long] = {
+    val windows = math.max(arr.numElements() - n + 1, 0)
     val vals = new Array[Long](windows)
     var m = 0
-    var anyNull = false
     var i = 0
     while (i < windows) {
       var v = 0L
@@ -168,24 +117,15 @@ object NgramShingles {
       var j = 0
       while (j < n && !nul) {
         if (arr.isNullAt(i + j)) nul = true
-        else v = v * 1031L + arr.getInt(i + j)
+        else v = v * Base + arr.getInt(i + j)
         j += 1
       }
-      if (nul) anyNull = true
-      else { vals(m) = v; m += 1 }
+      if (!nul) { vals(m) = v; m += 1 }
       i += 1
     }
-    java.util.Arrays.sort(vals, 0, m)
-    var d = 0
-    var k = 0
-    while (k < m) {
-      if (d == 0 || vals(k) != vals(d - 1)) { vals(d) = vals(k); d += 1 }
-      k += 1
-    }
-    val out = new Array[Any](d + (if (anyNull) 1 else 0))
-    var o = 0
-    while (o < d) { out(o) = vals(o); o += 1 }
-    out
+    val packed = if (m == windows) vals else java.util.Arrays.copyOf(vals, m)
+    java.util.Arrays.sort(packed)
+    packed
   }
 
   /** Column API: ngram_shingles(tokens, n) -> sorted distinct array<long>. */

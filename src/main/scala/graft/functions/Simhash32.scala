@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -26,29 +25,21 @@ import org.apache.spark.sql.graftbridge.Bridge
   * cleaner skip-null semantics, asserted equivalent on non-null inputs.
   * Empty array -> every Σ is 0, no bit set -> 0L (same as HOF).
   */
-case class Simhash32(child: Expression) extends UnaryExpression {
+case class Simhash32(child: Expression) extends UnaryKernel[ArrayData] {
+  import Simhash32._
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash32 needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash32"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     val counts = new Array[Int](32)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h = java.lang.Math.floorMod(
-          arr.getInt(i).toLong * 2654435761L, 4294967296L)
+        val h = java.lang.Math.floorMod(arr.getInt(i).toLong * Knuth, TwoTo32)
         var j = 0
         while (j < 32) {
           if (((h >> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
@@ -63,41 +54,17 @@ case class Simhash32(child: Expression) extends UnaryExpression {
       if (counts(j) > 0) sig |= (1L << j)
       j += 1
     }
-    sig
+    java.lang.Long.valueOf(sig)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $c.numElements();
-         |int[] $counts = new int[32];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($c.isNullAt($i)) continue;
-         |  long $h = java.lang.Math.floorMod(
-         |    (long) $c.getInt($i) * 2654435761L, 4294967296L);
-         |  for (int $j = 0; $j < 32; $j++) {
-         |    if ((($h >> $j) & 1L) == 1L) $counts[$j]++; else $counts[$j]--;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $j = 0; $j < 32; $j++) {
-         |  if ($counts[$j] > 0) $sig |= (1L << $j);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Simhash32 =
     copy(child = newChild)
 }
 
 object Simhash32 {
+  final val Knuth = 2654435761L
+  final val TwoTo32 = 4294967296L
+
   /** Column API: simhash32(tokens) -> bigint. */
   def apply(tokens: Column): Column =
     Bridge.column(Simhash32(Bridge.expression(tokens)))

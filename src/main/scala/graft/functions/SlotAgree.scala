@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -21,23 +20,14 @@ import org.apache.spark.sql.graftbridge.Bridge
   * array -> NULL.
   */
 case class SlotAgree(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"slot_agree needs two array<bigint>, got ${l.catalogString}, ${r.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "slot_agree"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def compute(x: ArrayData, y: ArrayData): java.lang.Integer = {
     val n = math.min(x.numElements(), y.numElements())
     var c = 0
     var i = 0
@@ -46,24 +36,8 @@ case class SlotAgree(left: Expression, right: Expression)
         c += 1
       i += 1
     }
-    c
+    java.lang.Integer.valueOf(c)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |int $c = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i) && !$y.isNullAt($i)
-         |      && $x.getLong($i) == $y.getLong($i)) $c++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SlotAgree =

@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object TokenFeatures {
 
-  private val P = 1000000007L // prime modulus for hash-family functions
-
   /** n_tok-normalized token histogram (grid-output analog + the S7
     * peak-normalisation analog): array<double>[k], entries sum to 1 for
     * non-empty docs. Hot path uses the native TokenHistogram expression. */
@@ -27,14 +25,8 @@ object TokenFeatures {
   /** Rolling polynomial fingerprint of a token array:
     * fold(acc = (acc * 31 + token) mod P). Order-sensitive document
     * fingerprint; deterministic, SQL-expressible (oracle: list_reduce).
-    * Native fused loop ([[Fingerprint64]]); HOF spec kept for the
-    * equivalence test. */
+    * Native fused loop ([[Fingerprint64]]). */
   def fingerprint(tokens: Column): Column = Fingerprint64(tokens)
-
-  /** The original interpreted fold — the executable spec the native
-    * expression is tested against. */
-  private[graft] def fingerprintHof(tokens: Column): Column =
-    aggregate(tokens, lit(0L), (acc, t) => (acc * 31L + t.cast("long")) % P)
 
   /** Whitespace token count. */
   def tokenCountWs(text: Column): Column =
@@ -105,42 +97,18 @@ object TokenFeatures {
   /** MinHash signature: array<long>[h] where entry i is
     * min over tokens of ((2i+1)·t + (i²+7)) mod P — a standard affine
     * hash family, SQL-expressible for the oracle. Native fused codegen
-    * loop ([[MinhashSig]]); the interpreted HOF form it replaced is kept
-    * below for the equivalence test. */
+    * loop ([[MinhashSig]]). */
   def minhashSignature(tokens: Column, numHashes: Int): Column =
     // the HOF form mapped over sequence(H), so a NULL tokens array gave H
     // null ENTRIES (not a null array) — preserved exactly via the coalesce
     coalesce(MinhashSig(tokens, numHashes),
       array_repeat(lit(null).cast("long"), numHashes))
 
-  /** The original O(H·n)-interpreted-nodes HOF composition — retained as
-    * the executable spec the native expression is tested against. */
-  private[graft] def minhashSignatureHof(tokens: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), h =>
-      array_min(transform(tokens, t =>
-        ((h * 2 + 1) * t.cast("long") + (h * h + 7)) % P)))
-
   /** SimHash (32-bit) over token identities with multiplicity: bit j is set
     * when Σ_tokens sign(bit_j(hash(token))) > 0. hash(t) = (t·2654435761)
     * mod 2^32 (Knuth multiplicative). Returns bigint. Native fused codegen
-    * loop ([[Simhash32]]); HOF spec kept below for the equivalence test. */
+    * loop ([[Simhash32]]). */
   def simhash32(tokens: Column): Column = Simhash32(tokens)
-
-  /** The original O(32·n)-interpreted-nodes HOF composition — retained as
-    * the executable spec the native expression is tested against. */
-  private[graft] def simhash32Hof(tokens: Column): Column = {
-    val acc0 = array_repeat(lit(0L), 32)
-    val folded = aggregate(tokens, acc0, (acc, t) => {
-      val h = pmod(t.cast("long") * 2654435761L, lit(4294967296L))
-      transform(acc, (cnt, j) =>
-        cnt + when(call_function("shiftright", h, j).bitwiseAND(1) === 1, 1L)
-          .otherwise(-1L))
-    })
-    aggregate(
-      zip_with(folded, sequence(lit(0), lit(31)), (c, j) =>
-        when(c > 0, call_function("shiftleft", lit(1L), j)).otherwise(0L)),
-      lit(0L), (a, b) => a.bitwiseOR(b))
-  }
 
   /** Hamming distance between two simhash values. */
   def hamming(a: Column, b: Column): Column =

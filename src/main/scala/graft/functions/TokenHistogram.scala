@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -14,55 +13,41 @@ import org.apache.spark.sql.graftbridge.Bridge
   * loop of the grid-output analog (n_tok-normalized token histograms,
   * SURVEY.md §7.2); a higher-order-function composition would be
   * O(n_tok × k) per row (transform-inside-aggregate), this is O(n_tok)
-  * with a primitive long[] and participates in whole-stage codegen via
-  * doGenCode — no boxing, no UDF serialization.
+  * with a primitive long[] in whole-stage codegen — no boxing, no UDF
+  * serialization.
+  *
+  * A null token element makes the whole result NULL (the FrameAgg/VecDot
+  * convention): counting it as token 0 would fabricate a bin, and
+  * skipping it would leave bins that no longer sum to n_tok.
   */
 case class TokenHistogram(child: Expression, buckets: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(buckets > 0, "buckets must be positive")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_histogram needs array<int>, got ${other.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = child.nullable || (child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  })
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "token_histogram"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): GenericArrayData = {
     val counts = new Array[Long](buckets)
     val n = arr.numElements()
+    // k = 2^m: token mod k is the low m bits (also for negative tokens),
+    // which spares the per-token division by a non-constant k
+    val mask = if ((buckets & (buckets - 1)) == 0) buckets - 1 else -1
     var i = 0
     while (i < n) {
-      val b = arr.getInt(i) % buckets
-      counts(if (b < 0) b + buckets else b) += 1L
+      if (arr.isNullAt(i)) return null
+      val t = arr.getInt(i)
+      counts(if (mask >= 0) t & mask else java.lang.Math.floorMod(t, buckets)) += 1L
       i += 1
     }
     new GenericArrayData(counts)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      s"""
-         |int $n = $c.numElements();
-         |long[] $counts = new long[$buckets];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  int $b = $c.getInt($i) % $buckets;
-         |  if ($b < 0) $b += $buckets;
-         |  $counts[$b] += 1L;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($counts);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): TokenHistogram =
     copy(child = newChild)

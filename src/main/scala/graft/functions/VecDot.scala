@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -21,22 +19,15 @@ import org.apache.spark.sql.graftbridge.Bridge
   * (GraftExtensions) inserts Casts so literal arrays coerce like
   * built-in functions. */
 case class VecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"vec_dot needs array<double> x array<double>, got " +
-          s"${l.catalogString} x ${r.catalogString}")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "vec_dot"
 
-  /** shared by eval and codegen (via reference object); null result for
-    * length mismatch / null elements, mirroring the zip_with form. */
+  /** Null result for length mismatch / null elements, mirroring the
+    * zip_with form. */
   def compute(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null
@@ -48,17 +39,6 @@ case class VecDot(left: Expression, right: Expression)
       i += 1
     }
     java.lang.Double.valueOf(acc)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("vecDot", this, classOf[VecDot].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double ${ev.value}_r = $self.compute($a, $b);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }""")
   }
 
   override protected def withNewChildrenInternal(

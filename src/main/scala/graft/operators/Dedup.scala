@@ -257,12 +257,6 @@ object Dedup {
   private def estJaccard(a: Column, b: Column, numHashes: Int): Column =
     graft.functions.SlotAgree(a, b).cast("double") / numHashes
 
-  /** The HOF composition [[estJaccard]] replaced — the executable spec
-    * its native expression is tested against (DedupSimilaritySpec). */
-  private[graft] def estJaccardHof(a: Column, b: Column, numHashes: Int): Column =
-    size(filter(zip_with(a, b, (x, y) =>
-      (x === y).cast("int")), v => v === 1)).cast("double") / numHashes
-
   def minhashLshPairs(
       df: DataFrame,
       idCol: String,
@@ -342,7 +336,9 @@ object Dedup {
 
   /** SimHash near-dup pairs: 32-bit simhash; blocking on each of 4 bytes
     * (two near-dups within hamming distance <= 7 share at least one byte),
-    * verify with exact hamming <= maxHamming. */
+    * verify with exact hamming <= maxHamming. (band, byte) buckets over
+    * `maxBucket` members are dropped through [[capBuckets]], so the drop
+    * is observed and logged like the minhash path's. */
   def simhashPairs(
       df: DataFrame,
       idCol: String,
@@ -354,13 +350,14 @@ object Dedup {
     val banded = sh.select(col("id"), col("sh"),
       posexplode(transform(sequence(lit(0), lit(3)), b =>
         call_function("shiftright", col("sh"), b * 8).bitwiseAND(255))))
-      .withColumnRenamed("col", "byte").withColumnRenamed("pos", "band")
-    val wB = Window.partitionBy(col("band"), col("byte"))
-    val capped = banded.withColumn("__n", count(lit(1)).over(wB))
-      .where(col("__n") <= maxBucket)
-    val a = capped.select(col("band"), col("byte"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = capped.select(col("band"), col("byte"), col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("band", "byte"))
+      .withColumnRenamed("col", "bucket").withColumnRenamed("pos", "band")
+    // materialized ONCE, as in minhashLshPairs: the observation then runs
+    // once instead of cancelling across the self-join's two legs
+    val capped = Checkpointing.materialize(
+      capBuckets(banded, maxBucket).drop("__n"))
+    val a = capped.select(col("band"), col("bucket"), col("id").as("id_a"), col("sh").as("sh_a"))
+    val b = capped.select(col("band"), col("bucket"), col("id").as("id_b"), col("sh").as("sh_b"))
+    a.join(b, Seq("band", "bucket"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         TokenFeatures.hamming(col("sh_a"), col("sh_b")).as("hamming"))

@@ -197,7 +197,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("slot_agree native == the zip_with HOF spec (estJaccard verify step)") {
-    import graft.operators.Dedup
     val rows = Seq(
       (Seq[java.lang.Long](1L, 2L, 3L, 4L), Seq[java.lang.Long](1L, 9L, 3L, 4L)),
       (Seq[java.lang.Long](), Seq[java.lang.Long](1L)),          // length skew
@@ -206,7 +205,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .toDF("a", "b")
     val both = rows.select(
       graft.functions.SlotAgree(col("a"), col("b")).as("native"),
-      Dedup.estJaccardHof(col("a"), col("b"), 1).as("hof_frac"))
+      HofSpecs.estJaccardHof(col("a"), col("b"), 1).as("hof_frac"))
     both.collect().foreach { r =>
       assert(r.getInt(0).toDouble == r.getDouble(1), r.toString)
     }
@@ -337,6 +336,26 @@ class DedupSimilaritySpec extends AnyFunSuite {
         System.currentTimeMillis() < deadline) Thread.sleep(100)
     assert(CapMetrics.totalDroppedRows - before >= 30L,
       s"cap dropped rows not observed (delta ${CapMetrics.totalDroppedRows - before})")
+  }
+
+  test("simhash bucket caps are observed and reported, never silent") {
+    import graft.operators.CapMetrics
+    val before = CapMetrics.totalDroppedRows
+    // 30 identical docs share one (band, byte) bucket in each of the 4
+    // bands, every one over maxBucket = 10 (4 x 30 dropped rows, which
+    // must be observed); the dup pair among the other docs survives
+    val hot = spark.range(30).select((col("id") + 1000L).as("doc_id"),
+      array((101 to 112).map(lit): _*).as("tokens"))
+    val pairs = Dedup.simhashPairs(docs.unionByName(hot), "doc_id", "tokens",
+      maxHamming = 2, maxBucket = 10)
+      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+    assert(pairs.contains((1L, 2L)))
+    assert(!pairs.exists(_._2 >= 1000L), pairs)
+    val deadline = System.currentTimeMillis() + 15000
+    while (CapMetrics.totalDroppedRows - before < 120L &&
+        System.currentTimeMillis() < deadline) Thread.sleep(100)
+    assert(CapMetrics.totalDroppedRows - before >= 120L,
+      s"simhash cap not observed (delta ${CapMetrics.totalDroppedRows - before})")
   }
 
   test("TOTAL cap wipeout (empty pair result) is still loud") {

@@ -21,7 +21,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val df = rows.toDF("tokens")
     val both = df.select(
       TokenFeatures.minhashSignature(col("tokens"), 8).as("native"),
-      TokenFeatures.minhashSignatureHof(col("tokens"), 8).as("hof"))
+      HofSpecs.minhashSignatureHof(col("tokens"), 8).as("hof"))
     both.collect().foreach { r =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1), r.toString)
     }
@@ -30,7 +30,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // native wrapper preserves that exactly)
     val nr = Seq(Tuple1(null: Seq[Integer])).toDF("tokens")
       .select(TokenFeatures.minhashSignature(col("tokens"), 4).as("n"),
-        TokenFeatures.minhashSignatureHof(col("tokens"), 4).as("h"))
+        HofSpecs.minhashSignatureHof(col("tokens"), 4).as("h"))
       .collect().head
     assert(!nr.isNullAt(0) && !nr.isNullAt(1))
     assert(nr.getSeq[Any](0) == nr.getSeq[Any](1))
@@ -54,7 +54,7 @@ class ExtensionsSpec extends AnyFunSuite {
       (1 to 200).toSeq)
     val both = rows.toDF("tokens").select(
       TokenFeatures.simhash32(col("tokens")).as("native"),
-      TokenFeatures.simhash32Hof(col("tokens")).as("hof"))
+      HofSpecs.simhash32Hof(col("tokens")).as("hof"))
     both.collect().foreach { r =>
       assert(r.getLong(0) == r.getLong(1), r.toString)
     }
@@ -77,7 +77,7 @@ class ExtensionsSpec extends AnyFunSuite {
       Seq[Integer](9, null, 4)) // null element poisons the fold -> NULL
     val both = rows.toDF("tokens").select(
       TokenFeatures.fingerprint(col("tokens")).as("native"),
-      TokenFeatures.fingerprintHof(col("tokens")).as("hof"))
+      HofSpecs.fingerprintHof(col("tokens")).as("hof"))
     both.collect().foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), r.toString)
       if (!r.isNullAt(0)) assert(r.getLong(0) == r.getLong(1), r.toString)
@@ -171,9 +171,39 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(strategies.exists(_.isInstanceOf[graft.plans.AsOfJoinStrategy.type]))
     val reg = org.apache.spark.sql.graftbridge.Bridge.registerInjectedFunctions(
       ext, org.apache.spark.sql.graftbridge.Bridge.emptyFunctionRegistry())
-    for (name <- Seq("vec_dot", "intersect_count", "frame_energy", "frame_mean"))
-      assert(reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
-        s"$name not registered by apply()")
+    assert(GraftExtensions.functions.length == 14)
+    for ((name, _, _) <- GraftExtensions.functions)
+      assert(reg.functionExists(name), s"$name not registered by apply()")
+  }
+
+  test("every SQL function reports a wrong argument count the same way") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    def arityError(name: String, args: Seq[Expression]) = {
+      val build = GraftExtensions.functions.find(_._1.funcName == name).get._3
+      intercept[IllegalArgumentException](build(args)).getMessage
+    }
+    assert(arityError("vec_dot", Seq(Literal(1))) == "vec_dot takes 2 arguments, got 1")
+    assert(arityError("fingerprint64", Nil) == "fingerprint64 takes 1 argument, got 0")
+  }
+
+  test("token_histogram: a NULL token makes the histogram NULL, not bin 0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.TokenFeatures
+    GraftExtensions.register(spark)
+    assert(spark.sql(
+      "SELECT token_histogram(array(1, CAST(NULL AS INT), 3), 4)").head().isNullAt(0))
+    // floor-mod bins for negative tokens, power-of-two k or not
+    assert(spark.sql("SELECT token_histogram(array(1, 5, 3, -1, -6), 4)")
+      .head().getSeq[Long](0) == Seq(0L, 2L, 1L, 2L))
+    assert(spark.sql("SELECT token_histogram(array(-1, -6, 7), 5)")
+      .head().getSeq[Long](0) == Seq(0L, 0L, 1L, 0L, 2L))
+    // the normalized histogram the CLI emits: NULL too, never bins
+    // that stop summing to 1
+    val h = Seq(Seq[Integer](1, null, 3)).toDF("tokens")
+      .select(TokenFeatures.histogram(col("tokens"), size(col("tokens")), 4))
+      .head()
+    assert(h.isNullAt(0))
   }
 
   test("SQL functions coerce natural literals and surface corrupt inputs as NULL") {
