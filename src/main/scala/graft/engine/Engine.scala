@@ -173,14 +173,7 @@ object Engine {
     // FeatureExtractionManager.cpp:229-232, 998-1011).
     def valueOf(t: SummaryType): Column = t match {
       case SummaryType.Count => array(col("count").cast("double"))
-      case SummaryType.Min => transform(col("min"), _.cast("double"))
-      case SummaryType.Max => transform(col("max"), _.cast("double"))
-      case SummaryType.Sum => col("sum")
-      case SummaryType.Mean => col("mean")
-      case SummaryType.Median => transform(col("median"), _.cast("double"))
-      case SummaryType.Mode => transform(col("mode"), _.cast("double"))
-      case SummaryType.Variance => col("variance")
-      case SummaryType.Sd => col("sd")
+      case other => col(other.name)
     }
     val typeTable = spark.createDataFrame(
       wanted.map { case (id, t) => (repOf(id), id, t.name, t.label) })

@@ -3,7 +3,9 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.SummaryType
 import graft.operators.{AsOf, Windows}
+import graft.summaries.{Summaries, VectorSummaries}
 
 /** The correctness-gate query surface: every operator from SURVEY.md §2
   * exposed as a (SparkSession, sfDir) => DataFrame, each with an equivalent
@@ -84,23 +86,31 @@ object Queries {
   }
 
   // ---------------------------------------------------------------- q6
-  /** Continuous-time weighted mean/sum/count/min/max per entity — the
-    * reference's summary semantics (SURVEY.md §2.4): each value extends to
-    * the next event's ts; the last extends to the end of input (global max
-    * ts, the analog of "end of input or last-ending output"). */
-  def q6SummaryCt(s: SparkSession, dir: String): DataFrame = {
+  /** The product's continuous-time reducers over one scalar value per
+    * entity event (SURVEY.md §2.4): each value extends to the next
+    * event's ts; the last extends to the end of input (global max ts, the
+    * analog of "end of input or last-ending output"). q6/q7/q8 each ask
+    * [[VectorSummaries.summarizeVector]] for their own reducers over the
+    * spans from [[Summaries.withSpans]]; `value` is the one bin. */
+  private def summaryCt(s: SparkSession, dir: String,
+      types: Set[SummaryType]): DataFrame = {
     val e = ev(s, dir)
     val globalEnd = e.agg(max(col("ts")).as("global_end"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc)
-    e.crossJoin(broadcast(globalEnd))
-      .withColumn("w_us", coalesce(lead(col("ts"), 1).over(w), col("global_end")) - col("ts"))
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(min(col("value")), 6).as("min_v"),
-        round(max(col("value")), 6).as("max_v"),
-        round(sum(col("value")), 6).as("sum_v"),
-        round(sum(col("value") * col("w_us")) / sum(col("w_us")), 6).as("mean_ct"))
+    val spanned = Summaries.withSpans(e.crossJoin(broadcast(globalEnd)),
+      "user_id", None, "ts", inputEnd = Some(col("global_end")))
+    VectorSummaries.summarizeVector(spanned.withColumn("values", array(col("value"))),
+      Seq("user_id"), "values", types = types)
+  }
+
+  /** Continuous-time weighted mean/sum/count/min/max per entity. */
+  def q6SummaryCt(s: SparkSession, dir: String): DataFrame = {
+    import SummaryType._
+    summaryCt(s, dir, Set(Count, Min, Max, Sum, Mean))
+      .select(col("user_id"), col("count").as("n"),
+        round(col("min")(0), 6).as("min_v"),
+        round(col("max")(0), 6).as("max_v"),
+        round(col("sum")(0), 6).as("sum_v"),
+        round(col("mean")(0), 6).as("mean_ct"))
       .orderBy("user_id")
   }
 
@@ -108,51 +118,20 @@ object Queries {
   /** Continuous-time weighted median + mode per entity (the reference's
     * hardest reducers; worked examples in
     * tests/test-summaries/expected/testplug-curve-vsr-{median,mode}.csv). */
-  def q7MedianModeCt(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir)
-    val wTime = Window.partitionBy(col("user_id")).orderBy(col("ts").asc)
-    val globalEnd = e.agg(max(col("ts")).as("global_end"))
-    val weighted = e.crossJoin(broadcast(globalEnd))
-      .withColumn("w_us",
-        (coalesce(lead(col("ts"), 1).over(wTime), col("global_end")) - col("ts")).cast("double"))
-      .groupBy(col("user_id"), col("value"))
-      .agg(sum(col("w_us")).as("w"))
-    // median: first value (ascending) whose cumulative weight >= total/2
-    val wVal = Window.partitionBy(col("user_id")).orderBy(col("value").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy(col("user_id"))
-    val med = weighted
-      .withColumn("cum", sum(col("w")).over(wVal))
-      .withColumn("half", sum(col("w")).over(wAll) / 2.0)
-      .where(col("cum") >= col("half"))
-      .groupBy(col("user_id")).agg(min(col("value")).as("median_ct"))
-    // mode: value with greatest total span; ties -> smallest value
-    val wMode = Window.partitionBy(col("user_id"))
-      .orderBy(col("w").desc, col("value").asc)
-    val mode = weighted
-      .withColumn("rn", row_number().over(wMode)).where(col("rn") === 1)
-      .select(col("user_id"), col("value").as("mode_ct"))
-    med.join(mode, Seq("user_id")).orderBy("user_id")
-  }
+  def q7MedianModeCt(s: SparkSession, dir: String): DataFrame =
+    summaryCt(s, dir, Set(SummaryType.Median, SummaryType.Mode))
+      .select(col("user_id"), col("median")(0).as("median_ct"),
+        col("mode")(0).as("mode_ct"))
+      .orderBy("user_id")
 
   // ---------------------------------------------------------------- q8
   /** Continuous-time weighted variance/sd (one-pass weighted moments). */
-  def q8VarianceCt(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc)
-    val globalEnd = e.agg(max(col("ts")).as("global_end"))
-    e.crossJoin(broadcast(globalEnd))
-      .withColumn("w_us",
-        (coalesce(lead(col("ts"), 1).over(w), col("global_end")) - col("ts")).cast("double"))
-      .groupBy(col("user_id"))
-      .agg(
-        (sum(col("value") * col("value") * col("w_us")) / sum(col("w_us")) -
-          pow(sum(col("value") * col("w_us")) / sum(col("w_us")), 2)).as("var_raw"))
+  def q8VarianceCt(s: SparkSession, dir: String): DataFrame =
+    summaryCt(s, dir, Set(SummaryType.Variance, SummaryType.Sd))
       .select(col("user_id"),
-        round(col("var_raw"), 4).as("variance_ct"),
-        round(sqrt(col("var_raw")), 6).as("sd_ct"))
+        round(col("variance")(0), 4).as("variance_ct"),
+        round(col("sd")(0), 6).as("sd_ct"))
       .orderBy("user_id")
-  }
 
   // ---------------------------------------------------------------- q9
   /** Top-k per entity (W6): top-3 purchases per user by value. */

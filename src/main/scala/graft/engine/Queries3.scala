@@ -46,7 +46,7 @@ object Queries3 {
   /** fill-ends projection (reference Lab writer rule): end = next event's
     * ts on the user timeline, last event's end = its own ts. */
   def q27FillEnds(s: SparkSession, dir: String): DataFrame =
-    Windows.fillEnds(ev(s, dir), "user_id", "ts")
+    Windows.fillEnds(ev(s, dir), Seq("user_id"), "ts")
       .select("event_id", "user_id", "ts", "end_ts")
       .orderBy("event_id")
 

@@ -48,17 +48,6 @@ object Framing {
         slice(col(tokensCol), (col("frame") * step + 1).cast("int"), lit(block)))
   }
 
-  /** Array-local frame map: apply `f` to every frame slice without
-    * exploding rows; result is one array<...> per row. */
-  def mapFrames(tokensCol: Column, nTokCol: Column, step: Int, block: Int)(
-      f: Column => Column): Column = {
-    when(nTokCol >= block,
-      transform(
-        sequence(lit(0L), frameCount(nTokCol, step, block) - 1L),
-        fr => f(slice(tokensCol, (fr * step + 1).cast("int"), lit(block)))))
-      .otherwise(array().cast("array<double>"))
-  }
-
   /** FixedSampleRate timestamp snapping (W4): explicit timestamps snap to
     * the fixed grid round(t*rate)/rate — golden
     * tests/test-vamp-test-plugin/expected/vamp-test-plugin-curve-fsr-timed.csv
@@ -88,12 +77,5 @@ object Framing {
       case WindowShape.Nuttall  => cosSum(0.355768, 0.487396, 0.144232, 0.012604)
       case WindowShape.BlackmanHarris => cosSum(0.35875, 0.48829, 0.14128, 0.01168)
     }
-  }
-
-  /** Apply a taper to a frame slice: zip_with(frame, coeffs, (x,w) -> x*w).
-    * Returns array<double>. Coefficients are a broadcast-safe literal. */
-  def applyTaper(slice: Column, shape: WindowShape, block: Int): Column = {
-    val coeffs = array(taperCoefficients(shape, block).map(lit): _*)
-    zip_with(slice, coeffs, (x, w) => x.cast("double") * w)
   }
 }

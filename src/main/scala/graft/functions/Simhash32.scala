@@ -16,14 +16,15 @@ import org.apache.spark.sql.graftbridge.Bridge
   * per-document cost on the same tier as the minhash signature. Here:
   * one fused int-array loop in whole-stage codegen.
   *
-  * Edge semantics match the HOF form: null token elements leave the
-  * accumulator untouched at every bit (the HOF's `when` yielded NULL,
-  * `cnt + NULL = NULL`... see note) — NOTE the HOF actually POISONED the
-  * accumulator on a null element (cnt + NULL = NULL → bucket NULL →
-  * final OR treats it as unset); our tables carry containsNull=false
-  * arrays so the case never arises, and the native form adopts the
-  * cleaner skip-null semantics, asserted equivalent on non-null inputs.
-  * Empty array -> every Σ is 0, no bit set -> 0L (same as HOF).
+  * Null token elements are skipped: they leave every Σ untouched. (The
+  * HOF form instead poisoned the bit's sum, `cnt + NULL = NULL`, which the
+  * final OR read as unset; the tables carry containsNull=false arrays, and
+  * the two forms are asserted equal on null-free inputs.) Empty array ->
+  * every Σ is 0, no bit set -> 0L, as in the HOF form.
+  *
+  * The per-bit update adds 2·bit − 1 instead of branching on the bit:
+  * hash bits are unpredictable, so the branch mispredicted about half the
+  * time.
   */
 case class Simhash32(child: Expression) extends UnaryKernel[ArrayData] {
   import Simhash32._
@@ -42,7 +43,7 @@ case class Simhash32(child: Expression) extends UnaryKernel[ArrayData] {
         val h = java.lang.Math.floorMod(arr.getInt(i).toLong * Knuth, TwoTo32)
         var j = 0
         while (j < 32) {
-          if (((h >> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
+          counts(j) += 2 * ((h >>> j) & 1L).toInt - 1
           j += 1
         }
       }

@@ -16,21 +16,11 @@ object TokenFeatures {
   def histogram(tokens: Column, nTok: Column, k: Int): Column =
     transform(TokenHistogram(tokens, k), c => c.cast("double") / nTok.cast("double"))
 
-  /** Frame energy: mean of squared token values over a slice (curve
-    * analog of the reference detection-function outputs). */
-  def energy(slice: Column): Column =
-    aggregate(slice, lit(0.0), (a, x) => a + x.cast("double") * x.cast("double")) /
-      size(slice).cast("double")
-
   /** Rolling polynomial fingerprint of a token array:
     * fold(acc = (acc * 31 + token) mod P). Order-sensitive document
     * fingerprint; deterministic, SQL-expressible (oracle: list_reduce).
     * Native fused loop ([[Fingerprint64]]). */
   def fingerprint(tokens: Column): Column = Fingerprint64(tokens)
-
-  /** Whitespace token count. */
-  def tokenCountWs(text: Column): Column =
-    size(split(text, "\\s+"))
 
   /** BPE-ish token count: letters runs, digit runs, and single non-space
     * punctuation marks each count as one token — the way a byte-pair

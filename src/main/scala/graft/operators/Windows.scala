@@ -4,11 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Windowed timeline operators: lag/lead, forward-fill backfill, and
+/** Windowed timeline operators: fill-ends, forward-fill backfill, and
   * gap-based sessionization (north_rule surface).
   *
   * Reference semantics these generalize:
-  *   - lag/lead: the CSV/Lab writers' `fill-ends`/`end-times` options set a
+  *   - fill-ends: the CSV/Lab writers' `fill-ends`/`end-times` options set a
   *     feature's end to the NEXT feature's start
   *     (/root/reference/runner/LabFeatureWriter.cpp:117-130,150-152;
   *     goldens tests/test-csv-writer/expected/curve-vsr-fill-ends.csv).
@@ -27,29 +27,20 @@ object Windows {
   def byEntity(entityCol: String, tsCol: String): WindowSpec =
     Window.partitionBy(col(entityCol)).orderBy(col(tsCol).asc)
 
-  /** Append lag/lead columns of `valueCol` over the entity timeline. */
-  def lagLead(df: DataFrame, entityCol: String, tsCol: String,
-      valueCol: String, offsets: Seq[Int] = Seq(1)): DataFrame = {
-    val w = byEntity(entityCol, tsCol)
-    offsets.foldLeft(df) { (d, k) =>
-      d.withColumn(s"${valueCol}_lag$k", lag(col(valueCol), k).over(w))
-        .withColumn(s"${valueCol}_lead$k", lead(col(valueCol), k).over(w))
-    }
-  }
-
-  /** End-times projection: end = ts + duration when duration is present,
-    * else the next feature's ts, else (last row) the row's own ts —
-    * exactly the reference Lab writer's fill-ends rule
-    * (runner/LabFeatureWriter.cpp:150-152,168-177). */
-  def fillEnds(df: DataFrame, entityCol: String, tsCol: String,
-      durationCol: Option[String] = None): DataFrame = {
-    val w = byEntity(entityCol, tsCol)
-    val nextTs = lead(col(tsCol), 1).over(w)
-    val end = durationCol match {
-      case Some(d) => coalesce(col(tsCol) + col(d), nextTs, col(tsCol))
-      case None    => coalesce(nextTs, col(tsCol))
-    }
-    df.withColumn("end_ts", end)
+  /** End-times projection, appended as `end_ts`: end = ts + duration when
+    * duration is present, else the next feature's ts on the same
+    * `entityCols` timeline, else (last row) `lastEnd` — by default the
+    * row's own ts, exactly the reference Lab writer's fill-ends rule
+    * (runner/LabFeatureWriter.cpp:150-152,168-177). The summarizer's span
+    * rule is the same with the end of input as `lastEnd`
+    * (Summaries.withSpans). */
+  def fillEnds(df: DataFrame, entityCols: Seq[String], tsCol: String,
+      durationCol: Option[String] = None,
+      lastEnd: Option[Column] = None): DataFrame = {
+    val w = Window.partitionBy(entityCols.map(col): _*).orderBy(col(tsCol).asc)
+    val ends = durationCol.map(d => col(tsCol) + col(d)).toSeq ++
+      Seq(lead(col(tsCol), 1).over(w), lastEnd.getOrElse(col(tsCol)))
+    df.withColumn("end_ts", coalesce(ends: _*))
   }
 
   /** Forward-fill: replace nulls in `valueCols` with the latest prior

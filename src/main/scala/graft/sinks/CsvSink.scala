@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Windows
 
 /** CSV feature/summary writer reproducing the reference's column layout and
   * option matrix (K1/K2 in SURVEY.md §2.1; option semantics exercised by
@@ -85,7 +86,9 @@ object CsvSink {
         (col("ts").cast("double") * opts.rate / 1e9).cast("long").cast("string")
       else secs9(col("ts"))
 
-    // end/duration column per the option matrix
+    // end/duration column per the option matrix; fill-ends reads the
+    // `end_ts` that Windows.fillEnds appends below
+    val fillEnds = opts.fillEnds && !opts.endTimes
     val endCol: Option[Column] =
       if (opts.endTimes)
         Some(when(col("duration").isNotNull,
@@ -93,14 +96,11 @@ object CsvSink {
             ((col("ts") + col("duration")).cast("double") * opts.rate / 1e9)
               .cast("long").cast("string")
           else secs9(col("ts") + col("duration"))))
-      else if (opts.fillEnds) {
-        val nextTs = lead(col("ts"), 1).over(
-          Window.partitionBy(col("transform_id"), col("doc_id")).orderBy(col("ts")))
-        val end = coalesce(col("ts") + col("duration"), nextTs, col("ts"))
+      else if (fillEnds)
         Some(if (opts.sampleTiming)
-          (end.cast("double") * opts.rate / 1e9).cast("long").cast("string")
-        else secs9(end))
-      } else
+          (col("end_ts").cast("double") * opts.rate / 1e9).cast("long").cast("string")
+        else secs9(col("end_ts")))
+      else
         Some(when(col("duration").isNotNull,
           if (opts.sampleTiming)
             (col("duration").cast("double") * opts.rate / 1e9).cast("long").cast("string")
@@ -139,7 +139,11 @@ object CsvSink {
       Seq(fileStart, tsOut) ++
         endCol.map(opt).toSeq ++
         Seq(coalesce(valuesPiece, lit("")), coalesce(labelPiece, lit(""))): _*)
-    features
+    val timed =
+      if (fillEnds)
+        Windows.fillEnds(features, Seq("transform_id", "doc_id"), "ts", Some("duration"))
+      else features
+    timed
       .withColumn("line", line)
       .select(col("doc_id"), col("transform_id"), col("ts"), col("line"))
   }

@@ -3,6 +3,7 @@ package graft.summaries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Windows
 
 /** The continuous-time span pre-pass of the reference's summary reducers
   * (SURVEY.md §2.4). The nine reducers themselves run once per group in
@@ -15,7 +16,8 @@ import org.apache.spark.sql.functions._
   * following feature; the FINAL feature extends until the end of the input
   * or the last-ending output, whichever is later. Features with explicit
   * durations span exactly their duration. All continuous-time reducers
-  * integrate over these spans.
+  * integrate over these spans. The rule is the fill-ends rule of
+  * [[graft.operators.Windows.fillEnds]] with that end as the last end.
   *
   * Dispatcher in the reference: runner/FeatureExtractionManager.cpp:118-131;
   * always invoked with ContinuousTimeAverage (`:1008,1057`).
@@ -38,28 +40,19 @@ object Summaries {
       tsCol: String,
       durationCol: Option[String] = None,
       inputEnd: Option[Column] = None): DataFrame = {
-    val groupCols = col(entityCol) +: transformCol.map(col).toSeq
-    val wSeq = Window.partitionBy(groupCols: _*).orderBy(col(tsCol).asc)
-    val wEntity = Window.partitionBy(col(entityCol))
-
     val ownEnd = durationCol match {
       case Some(d) => coalesce(col(tsCol) + col(d), col(tsCol))
       case None    => col(tsCol)
     }
     // last-ending output across the whole entity (all transforms)
-    val lastEnd = max(ownEnd).over(wEntity)
+    val lastEnd = max(ownEnd).over(Window.partitionBy(col(entityCol)))
     val globalEnd = inputEnd match {
       case Some(e) => greatest(lastEnd, e)
       case None    => lastEnd
     }
-    val end = durationCol match {
-      case Some(d) =>
-        coalesce(col(tsCol) + col(d), lead(col(tsCol), 1).over(wSeq), globalEnd)
-      case None =>
-        coalesce(lead(col(tsCol), 1).over(wSeq), globalEnd)
-    }
-    features
-      .withColumn("w_end", end)
+    Windows.fillEnds(features, entityCol +: transformCol.toSeq, tsCol,
+        durationCol, Some(globalEnd))
+      .withColumnRenamed("end_ts", "w_end")
       .withColumn("w", (col("w_end") - col(tsCol)).cast("double"))
   }
 }

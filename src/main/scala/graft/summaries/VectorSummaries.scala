@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{col, struct, udaf}
 import graft.model.SummaryType
 
-/** Element-wise (per-bin) summary reducers over `array<float>` values —
+/** Element-wise (per-bin) summary reducers over `array<double>` values —
   * the reference's grid outputs apply every reducer per bin
   * (fixture /root/reference/tests/test-summaries/expected/testplug-grid-fsr-min.csv:1-2,
   * SURVEY.md §2.4 A1).
@@ -21,32 +21,30 @@ import graft.model.SummaryType
 object VectorSummaries {
 
   /** Input element: one feature row's values + its continuous-time span. */
-  final case class VW(values: Seq[Float], w: Double)
+  final case class VW(values: Seq[Double], w: Double)
 
   // ------------------------------------------------------------- moments
 
   final case class MomentsBuf(
       var n: Long,
       var sumW: Double,
-      var mins: Array[Float],
-      var maxs: Array[Float],
+      var mins: Array[Double],
+      var maxs: Array[Double],
       var sums: Array[Double],
       var sumWV: Array[Double],
       var sumWV2: Array[Double])
 
   final case class MomentsOut(
       count: Long,
-      min: Seq[Float],
-      max: Seq[Float],
+      min: Seq[Double],
+      max: Seq[Double],
       sum: Seq[Double],
       mean: Seq[Double],
       variance: Seq[Double],
       sd: Seq[Double])
 
-  private def grow(a: Array[Float], n: Int, fill: Float): Array[Float] =
+  private def grow(a: Array[Double], n: Int, fill: Double = 0.0): Array[Double] =
     if (a.length >= n) a else Array.tabulate(n)(i => if (i < a.length) a(i) else fill)
-  private def growD(a: Array[Double], n: Int): Array[Double] =
-    if (a.length >= n) a else Array.tabulate(n)(i => if (i < a.length) a(i) else 0.0)
 
   /** count/min/max/sum + continuous-time weighted mean/variance/sd, per bin. */
   class VectorMomentsAgg extends Aggregator[VW, MomentsBuf, MomentsOut] {
@@ -57,9 +55,9 @@ object VectorSummaries {
       val vs = in.values
       if (vs != null) {
         val n = vs.length
-        b.mins = grow(b.mins, n, Float.PositiveInfinity)
-        b.maxs = grow(b.maxs, n, Float.NegativeInfinity)
-        b.sums = growD(b.sums, n); b.sumWV = growD(b.sumWV, n); b.sumWV2 = growD(b.sumWV2, n)
+        b.mins = grow(b.mins, n, Double.PositiveInfinity)
+        b.maxs = grow(b.maxs, n, Double.NegativeInfinity)
+        b.sums = grow(b.sums, n); b.sumWV = grow(b.sumWV, n); b.sumWV2 = grow(b.sumWV2, n)
         var i = 0
         while (i < n) {
           val v = vs(i)
@@ -78,9 +76,9 @@ object VectorSummaries {
 
     def merge(a: MomentsBuf, c: MomentsBuf): MomentsBuf = {
       val n = math.max(a.mins.length, c.mins.length)
-      a.mins = grow(a.mins, n, Float.PositiveInfinity)
-      a.maxs = grow(a.maxs, n, Float.NegativeInfinity)
-      a.sums = growD(a.sums, n); a.sumWV = growD(a.sumWV, n); a.sumWV2 = growD(a.sumWV2, n)
+      a.mins = grow(a.mins, n, Double.PositiveInfinity)
+      a.maxs = grow(a.maxs, n, Double.NegativeInfinity)
+      a.sums = grow(a.sums, n); a.sumWV = grow(a.sumWV, n); a.sumWV2 = grow(a.sumWV2, n)
       var i = 0
       while (i < c.mins.length) {
         if (c.mins(i) < a.mins(i)) a.mins(i) = c.mins(i)
@@ -111,14 +109,14 @@ object VectorSummaries {
 
   // --------------------------------------------------------- median/mode
 
-  final case class MedianModeOut(median: Seq[Float], mode: Seq[Float])
+  final case class MedianModeOut(median: Seq[Double], mode: Seq[Double])
 
   /** Median/mode partial state: per bin, a value→total-span table kept as
     * PARALLEL SORTED ARRAYS (keys ascending in java.util.Arrays total
     * order: -0.0 < 0.0, NaN last — the same order the finisher needs).
     * Product-encoded: partials spill/shuffle as columnar UnsafeRows
-    * (nested float/double arrays), not opaque Kryo blobs. */
-  final case class MMBuf(var keys: Array[Array[Float]], var ws: Array[Array[Double]])
+    * (nested double arrays), not opaque Kryo blobs. */
+  final case class MMBuf(var keys: Array[Array[Double]], var ws: Array[Array[Double]])
 
   /** Per-bin continuous-time weighted median + mode. State is one sorted
     * value→span table per bin; suitable when per-bin distinct values are
@@ -130,7 +128,7 @@ object VectorSummaries {
 
     private def growBuf(b: MMBuf, n: Int): MMBuf = {
       if (b.keys.length < n) {
-        b.keys = Array.tabulate(n)(i => if (i < b.keys.length) b.keys(i) else Array.empty[Float])
+        b.keys = Array.tabulate(n)(i => if (i < b.keys.length) b.keys(i) else Array.empty[Double])
         b.ws = Array.tabulate(n)(i => if (i < b.ws.length) b.ws(i) else Array.empty[Double])
       }
       b
@@ -138,13 +136,13 @@ object VectorSummaries {
 
     /** Sorted insert-or-add; O(log k) hit, O(k) copy on a new distinct
       * value — k is bounded by contract, and the arrays stay finish-ready. */
-    private def add(b: MMBuf, bin: Int, v: Float, w: Double): Unit = {
+    private def add(b: MMBuf, bin: Int, v: Double, w: Double): Unit = {
       val ks = b.keys(bin)
       val idx = java.util.Arrays.binarySearch(ks, v)
       if (idx >= 0) b.ws(bin)(idx) += w
       else {
         val ins = -idx - 1
-        val nk = new Array[Float](ks.length + 1)
+        val nk = new Array[Double](ks.length + 1)
         val nw = new Array[Double](ks.length + 1)
         System.arraycopy(ks, 0, nk, 0, ins)
         System.arraycopy(b.ws(bin), 0, nw, 0, ins)
@@ -175,11 +173,11 @@ object VectorSummaries {
         if (ak.isEmpty) { a.keys(i) = ck; a.ws(i) = cw }
         else {
           // linear merge of two sorted tables
-          val nk = new Array[Float](ak.length + ck.length)
+          val nk = new Array[Double](ak.length + ck.length)
           val nw = new Array[Double](ak.length + ck.length)
           var x = 0; var y = 0; var z = 0
           while (x < ak.length && y < ck.length) {
-            val cmp = java.lang.Float.compare(ak(x), ck(y))
+            val cmp = java.lang.Double.compare(ak(x), ck(y))
             if (cmp == 0) { nk(z) = ak(x); nw(z) = aw(x) + cw(y); x += 1; y += 1 }
             else if (cmp < 0) { nk(z) = ak(x); nw(z) = aw(x); x += 1 }
             else { nk(z) = ck(y); nw(z) = cw(y); y += 1 }
@@ -196,8 +194,8 @@ object VectorSummaries {
     }
 
     def finish(b: MMBuf): MedianModeOut = {
-      val med = new Array[Float](b.keys.length)
-      val mode = new Array[Float](b.keys.length)
+      val med = new Array[Double](b.keys.length)
+      val mode = new Array[Double](b.keys.length)
       var i = 0
       while (i < b.keys.length) {
         val ks = b.keys(i); val ws = b.ws(i)
@@ -205,7 +203,7 @@ object VectorSummaries {
         var j = 0
         while (j < ws.length) { total += ws(j); j += 1 }
         var cum = 0.0
-        var m = Float.NaN
+        var m = Double.NaN
         j = 0
         while (j < ks.length && m.isNaN) {
           cum += ws(j)
@@ -215,7 +213,7 @@ object VectorSummaries {
         med(i) = m
         // mode: greatest total span; ties -> smallest value (keys ascending,
         // strict > keeps the first = smallest)
-        var best = Float.NaN; var bestW = Double.NegativeInfinity
+        var best = Double.NaN; var bestW = Double.NegativeInfinity
         j = 0
         while (j < ks.length) {
           if (ws(j) > bestW) { bestW = ws(j); best = ks(j) }
@@ -238,13 +236,14 @@ object VectorSummaries {
     SummaryType.Mean, SummaryType.Variance, SummaryType.Sd)
 
   /** DataFrame-level API: per-group per-bin summaries in ONE shuffle.
-    * `valuesCol` must be array<float>, `wCol` the span from
+    * `valuesCol` is any numeric array (cast once to array<double>; a
+    * float feature upcasts exactly), `wCol` the span from
     * Summaries.withSpans.
     *
     * Only the aggregators needed for `types` run: a mean-only request
-    * never pays the median/mode HashMap state (one value→span map per
-    * bin per group, Kryo-serialized on every partial merge — pure waste
-    * on the common mean/count path at 10^12 rows). Output columns are
+    * never pays the median/mode state (one sorted value→span table per
+    * bin per group, rebuilt on every partial merge — pure waste on the
+    * common mean/count path at 10^12 rows). Output columns are
     * the requested subset of: count, min, max, sum, mean, variance, sd,
     * median, mode (arrays), then the `extra` aggregates by name — computed
     * in the same aggregate, so the caller's input is evaluated once.
@@ -261,7 +260,7 @@ object VectorSummaries {
     val needMoments = types.exists(momentTypes)
     val needMedMode = types.contains(SummaryType.Median) ||
       types.contains(SummaryType.Mode)
-    val (vc, wc) = (col(valuesCol), col(wCol).cast("double"))
+    val (vc, wc) = (col(valuesCol).cast("array<double>"), col(wCol).cast("double"))
 
     val aggs = Seq(
       if (needMoments)

@@ -116,6 +116,25 @@ class PlanFingerprintSpec extends AnyFunSuite {
     assert(fp.cartesians == 0 && fp.broadcastNLJoins == 0)
   }
 
+  test("q6/q7/q8 run the product reducers; q7 has no window over value") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    // walks into the executed AQE query stages
+    val stages = new AdaptiveSparkPlanHelper {}
+    for ((q, df, agg) <- Seq(
+        ("q6", Queries.q6SummaryCt(spark, dir), "vectormomentsagg"),
+        ("q7", Queries.q7MedianModeCt(spark, dir), "vectormedianmodeagg"),
+        ("q8", Queries.q8VarianceCt(spark, dir), "vectormomentsagg"))) {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.toLowerCase.contains(agg), s"$q:\n$plan")
+      // the only windows are the span rule's, over each user's ts
+      val orderedBy = stages.collect(plan) { case w: WindowExec => w.orderSpec }
+        .flatten.flatMap(_.child.references.map(_.name)).distinct
+      assert(orderedBy == Seq("ts"), s"$q orders its windows by $orderedBy:\n$plan")
+    }
+  }
+
   /** A sequences table on parquet with one extra wide column no pipeline
     * reads: a scan that reads it has lost its column pruning. */
   private lazy val wideSeqs: DataFrame = {

@@ -51,15 +51,20 @@ class SummariesSpec extends AnyFunSuite {
     val s = summary
     assert(s("count") == 10.0)
     assert(math.abs(s("min") - 0.0) < 1e-9)
-    assert(math.abs(s("max") - 0.9) < 1e-9)
+    // min/max/median/mode select a stored value: exactly the float32
+    // feature value, upcast without rounding
+    assert(s("max") == curve32(9))
+    assert(math.abs(s("max") - 0.9) < 1e-6)
     assert(math.abs(s("sum") - curve32.sum) < 1e-9)
     assert(math.abs(s("sum") - 4.5) < 1e-6)
     // testplug-curve-vsr-mean.csv:12-19 -> 0.553846
     assert(math.abs(s("mean") - 0.5538461538) < 1e-6)
     // testplug-curve-vsr-median.csv:12-16 -> 0.6
-    assert(math.abs(s("median") - 0.6) < 1e-9)
+    assert(s("median") == curve32(6))
+    assert(math.abs(s("median") - 0.6) < 1e-6)
     // testplug-curve-vsr-mode.csv:12-15 -> 0.9
-    assert(math.abs(s("mode") - 0.9) < 1e-9)
+    assert(s("mode") == curve32(9))
+    assert(math.abs(s("mode") - 0.9) < 1e-6)
     // testplug-curve-vsr-variance.csv:12-19 -> 0.0994083
     assert(math.abs(s("variance") - 0.0994083) < 1e-6)
     // testplug-curve-vsr-sd.csv -> 0.315291
@@ -146,17 +151,17 @@ class SummariesSpec extends AnyFunSuite {
 
   test("median/mode buffer merge handles ragged + NaN + tie cases") {
     val agg = new VectorSummaries.VectorMedianModeAgg
-    val b1 = agg.reduce(agg.zero, VectorSummaries.VW(Seq(1.0f, Float.NaN), 1.0))
-    val b2 = agg.reduce(agg.zero, VectorSummaries.VW(Seq(1.0f, 2.0f, 3.0f), 2.0))
+    val b1 = agg.reduce(agg.zero, VectorSummaries.VW(Seq(1.0, Double.NaN), 1.0))
+    val b2 = agg.reduce(agg.zero, VectorSummaries.VW(Seq(1.0, 2.0, 3.0), 2.0))
     val m = agg.merge(b1, b2)
     val out = agg.finish(m)
     // bin 0: {1.0 -> 3.0}; bin 1: {NaN -> 1, 2.0 -> 2} -> mode 2.0 (max w)
-    assert(out.mode(0) == 1.0f)
-    assert(out.mode(1) == 2.0f)
+    assert(out.mode(0) == 1.0)
+    assert(out.mode(1) == 2.0)
     // bin 2 only present in b2
-    assert(out.median(2) == 3.0f)
-    // NaN keys accumulate into ONE entry (Java float total order)
-    val b3 = agg.reduce(b1, VectorSummaries.VW(Seq(0.0f, Float.NaN), 5.0))
+    assert(out.median(2) == 3.0)
+    // NaN keys accumulate into ONE entry (Java double total order)
+    val b3 = agg.reduce(b1, VectorSummaries.VW(Seq(0.0, Double.NaN), 5.0))
     val out3 = agg.finish(b3)
     assert(out3.mode(1).isNaN) // NaN span now 6.0 > nothing else
   }

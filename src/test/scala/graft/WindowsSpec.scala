@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Windows
 
@@ -37,18 +38,25 @@ class WindowsSpec extends AnyFunSuite {
   test("fillEnds: end = next ts; last row = own ts (reference fill-ends rule)") {
     // goldens tests/test-csv-writer/expected/curve-vsr-fill-ends.csv
     val df = Seq(("d", 0L), ("d", 10L), ("d", 25L)).toDF("doc", "ts")
-    val out = Windows.fillEnds(df, "doc", "ts")
+    val out = Windows.fillEnds(df, Seq("doc"), "ts")
       .collect().map(r => r.getAs[Long]("ts") -> r.getAs[Long]("end_ts")).toMap
     assert(out(0L) == 10L)
     assert(out(10L) == 25L)
     assert(out(25L) == 25L)
+    // the summarizer's form: timelines keyed by (doc, transform), the last
+    // row extended to a given end
+    val two = Seq(("d", "a", 0L), ("d", "a", 10L), ("d", "b", 5L)).toDF("doc", "tr", "ts")
+    val ext = Windows.fillEnds(two, Seq("doc", "tr"), "ts", lastEnd = Some(lit(40L)))
+      .collect().map(r => (r.getAs[String]("tr"), r.getAs[Long]("ts")) ->
+        r.getAs[Long]("end_ts")).toMap
+    assert(ext == Map(("a", 0L) -> 10L, ("a", 10L) -> 40L, ("b", 5L) -> 40L))
   }
 
   test("fillEnds with duration: explicit duration wins (end-times rule)") {
     // goldens tests/test-csv-writer/expected/notes-regions-end-times.csv
     val df = Seq(("d", 0L, Some(4L)), ("d", 10L, None: Option[Long]))
       .toDF("doc", "ts", "dur")
-    val out = Windows.fillEnds(df, "doc", "ts", Some("dur"))
+    val out = Windows.fillEnds(df, Seq("doc"), "ts", Some("dur"))
       .collect().map(r => r.getAs[Long]("ts") -> r.getAs[Long]("end_ts")).toMap
     assert(out(0L) == 4L)
     assert(out(10L) == 10L)

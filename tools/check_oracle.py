@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf tables, load the Spark parquet dump, and compare
-(row count, schema column names, sorted-values hash / allclose)."""
+(row count, schema column names, sorted-values hash / allclose).
+
+Usage: check_oracle.py [sfDir] [verifyOut] [query ...]
+Query names restrict the check to those gates. The last line is
+`passed N/M`; the exit code is 1 when any checked gate fails."""
 import sys, json, glob
 import duckdb
 import pandas as pd
@@ -9,6 +13,7 @@ import numpy as np
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+only = set(sys.argv[3:])
 
 con = duckdb.connect()
 for tbl in ["region", "nation", "customer", "supplier", "part", "orders",
@@ -16,8 +21,12 @@ for tbl in ["region", "nation", "customer", "supplier", "part", "orders",
     con.sql(f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+unknown = only - oracle.keys()
+if unknown:
+    sys.exit(f"unknown queries: {', '.join(sorted(unknown))}")
+checks = sorted((n, q) for n, q in oracle.items() if not only or n in only)
 fail = 0
-for name, sql in sorted(oracle.items()):
+for name, sql in checks:
     try:
         exp = con.sql(sql).df()
         got = pd.concat([pd.read_parquet(p) for p in
@@ -63,4 +72,5 @@ for name, sql in sorted(oracle.items()):
     print(("PASS" if ok else "FAIL"), name, f"rows={len(exp)}",
           "; ".join(msgs))
     fail += 0 if ok else 1
+print(f"passed {len(checks) - fail}/{len(checks)}")
 sys.exit(1 if fail else 0)
