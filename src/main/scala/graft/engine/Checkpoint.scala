@@ -1,6 +1,8 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,14 +83,10 @@ object Checkpoint {
     val dir = Paths.get(outDir, "_graft_manifest")
     if (!Files.exists(dir)) Nil
     else {
-      val it = Files.list(dir).iterator()
-      val buf = scala.collection.mutable.Buffer.empty[String]
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.getFileName.toString.endsWith(".json"))
-          buf += Files.readString(p)
+      Using.resource(Files.list(dir)) {
+        _.iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
+          .map(p => Files.readString(p)).toSeq.sorted
       }
-      buf.toSeq.sorted
     }
   }
 }

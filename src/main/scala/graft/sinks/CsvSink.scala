@@ -1,6 +1,8 @@
 package graft.sinks
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,7 +79,11 @@ object CsvSink {
   /** Format feature rows (doc_id, transform_id, ts, duration, values,
     * label) into one `line` string column + ordering keys. */
   def formatFeatures(features: DataFrame, opts: Options): DataFrame = {
-    val w = Window.partitionBy(col("transform_id")).orderBy(col("doc_id"), col("ts"))
+    // the doc name opens each (doc, transform) block: a per-block window
+    // (no single-transform funnel), the same partitioning and order as
+    // the fill-ends `lead`, so with fill-ends both share one exchange
+    // and one sort
+    val w = Window.partitionBy(col("transform_id"), col("doc_id")).orderBy(col("ts"))
     val sep = opts.separator
     val g = gFormat(opts.digits)
 
@@ -108,8 +114,7 @@ object CsvSink {
 
     val fileCol: Option[Column] =
       if (opts.omitFilename) None
-      else Some(when(lag(col("doc_id"), 1).over(w).isNull ||
-          lag(col("doc_id"), 1).over(w) =!= col("doc_id"),
+      else Some(when(row_number().over(w) === 1,
         concat(lit("\""), col("doc_id"), lit("\""))).otherwise(lit("")))
 
     // Build the line CONDITIONALLY per optional slot instead of post-hoc
@@ -174,22 +179,27 @@ object CsvSink {
 
   /** Write formatted lines as ONE csv file (the reference --csv-one-file):
     * deterministic global order (doc, transform, ts), single part file
-    * moved to `path`. Refuses to overwrite unless force/append (K8). */
+    * moved to `path`. Refuses to overwrite unless force/append (K8).
+    *
+    * The lines are gathered into one partition and sorted there: the
+    * upstream stages keep their parallelism up to the single-partition
+    * exchange, and the input is evaluated once. A global `orderBy` would
+    * add a range-partitioner sampling job that evaluates the whole input
+    * a second time, only to pick boundaries for partitions that are then
+    * coalesced into one. */
   def writeOneFile(lines: DataFrame, path: String, opts: Options): Unit = {
     val target = Paths.get(path)
     if (Files.exists(target) && !opts.force && !opts.append)
       throw new IllegalStateException(
         s"output $path exists (use force/append)") // K8 overwrite policy
     val tmp = path + ".__graft_tmp"
-    lines.orderBy(col("doc_id"), col("transform_id"), col("ts"))
+    lines.select(col("doc_id"), col("transform_id"), col("ts"), col("line"))
+      .repartition(1)
+      .sortWithinPartitions(col("doc_id"), col("transform_id"), col("ts"))
       .select(col("line"))
-      .coalesce(1)
       .write.mode("overwrite").text(tmp)
-    val part = Files.list(Paths.get(tmp)).iterator()
-    var src: java.nio.file.Path = null
-    while (part.hasNext) {
-      val p = part.next()
-      if (p.getFileName.toString.startsWith("part-")) src = p
+    val src = Using.resource(Files.list(Paths.get(tmp))) {
+      _.iterator().asScala.find(_.getFileName.toString.startsWith("part-")).orNull
     }
     if (opts.append && Files.exists(target)) {
       val prev = Files.readAllBytes(target)
@@ -202,8 +212,9 @@ object CsvSink {
       Files.move(src, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     // clean tmp
-    Files.walk(Paths.get(tmp)).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    Using.resource(Files.walk(Paths.get(tmp))) {
+      _.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
+    }
   }
 
   /** Per-(doc, transform) files named `<doc>_<transform ':'->'_'>.csv`

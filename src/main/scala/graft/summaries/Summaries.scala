@@ -24,7 +24,9 @@ import graft.operators.Windows
   */
 object Summaries {
 
-  /** Append `w_end` / `w` (span) columns to a feature timeline.
+  /** Append `w_end` / `w` (span) columns to a feature timeline. The
+    * entity-wide last end and the fill-ends `lead` share one hash
+    * exchange on the entity and one sort on (entity, transform, ts).
     *
     * @param features    (entityCol, [transformCol,] tsCol, [durationCol,] valueCol…)
     * @param inputEnd    optional end-of-input column (e.g. per-entity stream
@@ -44,8 +46,13 @@ object Summaries {
       case Some(d) => coalesce(col(tsCol) + col(d), col(tsCol))
       case None    => col(tsCol)
     }
-    // last-ending output across the whole entity (all transforms)
-    val lastEnd = max(ownEnd).over(Window.partitionBy(col(entityCol)))
+    // last-ending output across the whole entity (all transforms). The
+    // whole-partition frame makes the order irrelevant to the value; it
+    // is the fill-ends `lead` window's (entity, transform, ts), so both
+    // windows run over one sort
+    val lastEnd = max(ownEnd).over(Window.partitionBy(col(entityCol))
+      .orderBy((transformCol.toSeq :+ tsCol).map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     val globalEnd = inputEnd match {
       case Some(e) => greatest(lastEnd, e)
       case None    => lastEnd

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, explode, lit}
 import graft.engine.{ChangepointsExtractor, ClicksExtractor, EnergyExtractor,
   Pipelines, PlanFingerprint, PlanProbes, Queries, Queries3, Queries5,
   Queries6, RegionsExtractor, SpectrumExtractor}
@@ -132,6 +132,48 @@ class PlanFingerprintSpec extends AnyFunSuite {
       val orderedBy = stages.collect(plan) { case w: WindowExec => w.orderSpec }
         .flatten.flatMap(_.child.references.map(_.name)).distinct
       assert(orderedBy == Seq("ts"), s"$q orders its windows by $orderedBy:\n$plan")
+    }
+  }
+
+  test("the span rule's windows share one sort (summarize and q6)") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.engine.Engine
+    import graft.model.SummaryType
+    val stages = new AdaptiveSparkPlanHelper {}
+    // the sorts between a window and the exchange that feeds it
+    def sortsUnder(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: Exchange | _: QueryStageExec => Nil
+      case s: SortExec => s +: s.children.flatMap(sortsUnder)
+      case o => o.children.flatMap(sortsUnder)
+    }
+    def spanSorts(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val windows = stages.collect(plan) { case w: WindowExec => w }
+      val sorts = windows.flatMap(w => sortsUnder(w.child))
+        .map(System.identityHashCode).distinct
+      (windows.size, sorts.size)
+    }
+    val specs = Seq(
+      TransformSpec(id = "df", plugin = "graft:energy",
+        output = "detectionfunction", summaryType = Some(SummaryType.Mean)),
+      TransformSpec(id = "grid", plugin = "graft:histogram",
+        output = "grid", summaryType = Some(SummaryType.Median)))
+    val seqs = SequenceGen.generate(spark, 12, seed = 5L).toDF()
+    val ends = seqs.select(col("doc_id"), explode(lit(Array("df", "grid"))).as("transform_id"),
+      (col("n_tok").cast("long") * 1000000L).as("input_end_ns"))
+    // q6 has no transform column: its two windows have one spec and
+    // collapse into one window node
+    for ((name, df, expectedWindows) <- Seq(
+        ("summarize", Engine.summarize(Engine.run(seqs, specs), specs,
+          inputEnds = Some(ends)), 2),
+        ("q6", Queries.q6SummaryCt(spark, dir), 1))) {
+      val (windows, sorts) = spanSorts(df)
+      assert(windows == expectedWindows && sorts == 1,
+        s"$name: $windows span windows over $sorts sorts:\n${df.queryExecution.executedPlan}")
     }
   }
 

@@ -88,6 +88,83 @@ class SinksSpec extends AnyFunSuite {
     assert(Files.readAllLines(Paths.get(path)).size() == 6)
   }
 
+  /** (doc_id, transform_id, ts, line) rows with unique keys, dealt into
+    * `parts` shuffled partitions. */
+  private def shuffledLines(n: Int, parts: Int) = {
+    val rnd = new scala.util.Random(11L)
+    rnd.shuffle((0 until n).map { i =>
+      val (d, t, ts) = (f"d${i % 7}%02d", f"t${i % 3}", i.toLong * S)
+      (d, t, ts, s"$d|$t|$ts")
+    }).toDF("doc_id", "transform_id", "ts", "line").repartition(parts)
+  }
+
+  test("one-file write: the global (doc, transform, ts) order from any input") {
+    val dir = Files.createTempDirectory("graftorder").toString
+    val lines = shuffledLines(500, 5)
+    CsvSink.writeOneFile(lines, s"$dir/out.csv", CsvSink.Options())
+    val expected = lines.as[(String, String, Long, String)].collect()
+      .sortBy(r => (r._1, r._2, r._3)).map(_._4).toSeq
+    assert(Files.readAllLines(Paths.get(s"$dir/out.csv")).toArray.toSeq == expected)
+    CsvSink.writeOneFile(lines.limit(0), s"$dir/empty.csv", CsvSink.Options())
+    assert(Files.size(Paths.get(s"$dir/empty.csv")) == 0L)
+  }
+
+  test("one-file write evaluates its input once (no range-sampling pass)") {
+    val n = 1000
+    val evals = spark.sparkContext.longAccumulator("line evaluations")
+    val render = udf { (d: String, ts: Long) => evals.add(1L); s"$d,$ts" }
+    // the counting UDF runs in the last stage before the sink
+    val lines = shuffledLines(n, 4)
+      .withColumn("line", render(col("doc_id"), col("ts")))
+    val dir = Files.createTempDirectory("graftonce").toString
+    CsvSink.writeOneFile(lines, s"$dir/out.csv", CsvSink.Options())
+    assert(Files.readAllLines(Paths.get(s"$dir/out.csv")).size() == n)
+    assert(evals.value == n, s"$n lines evaluated ${evals.value} times")
+  }
+
+  test("fill-ends formatting: one exchange per (transform, doc), one sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.engine.PlanFingerprint
+    val df = CsvSink.formatFeatures(curve, CsvSink.Options(fillEnds = true))
+    val fp = PlanFingerprint.of(df)
+    assert(fp.exchanges == 1 && fp.sorts == 1, fp.json)
+    // the filename window shares the fill-ends exchange, which spreads a
+    // transform's docs over tasks instead of funnelling them into one
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val keys = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning => h.references.map(_.name).toSet }
+    assert(keys == Seq(Set("transform_id", "doc_id")), s"exchange keys: $keys")
+  }
+
+  /** Open file descriptors of this JVM, where `/proc/self/fd` exists. */
+  private def openFds(): Long = {
+    val fd = Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fd), "needs /proc/self/fd")
+    System.gc()
+    scala.util.Using.resource(Files.list(fd))(_.count())
+  }
+
+  test("manifest reads and one-file writes close their directory handles") {
+    import graft.engine.Checkpoint
+    val out = Files.createTempDirectory("graftfds")
+    val manifestDir = Files.createDirectories(out.resolve("_graft_manifest"))
+    (0 until 3).foreach(b => Files.writeString(manifestDir.resolve(s"bucket-$b.json"), "{}"))
+    val lines = CsvSink.formatFeatures(curve, CsvSink.Options())
+    val path = s"$out/one.csv"
+    CsvSink.writeOneFile(lines, path, CsvSink.Options(force = true)) // warm-up
+    Checkpoint.manifest(out.toString)
+    val before = openFds()
+    (0 until 50).foreach(_ => assert(Checkpoint.manifest(out.toString).size == 3))
+    (0 until 10).foreach(_ => CsvSink.writeOneFile(lines, path, CsvSink.Options(force = true)))
+    val leaked = openFds() - before
+    assert(leaked < 10, s"$leaked file descriptors left open")
+  }
+
   test("gFormat matches C %g in exponent range (trimmed mantissa)") {
     // C: printf("%.6g", 1e7) -> "1e+07"; Java alone keeps "1.00000e+07"
     assert(CsvSink.gFormatValue(1e7, 6) == "1e+07")
