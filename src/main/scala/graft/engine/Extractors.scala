@@ -44,7 +44,7 @@ trait FeatureExtractor {
     * FeatureExtractionManager.cpp:319-329,187-206). */
   def resolve(spec: TransformSpec): (Int, Int, Double) = {
     val (s, b) = Framing.resolveSizes(spec.stepSize, spec.blockSize, preferredBlock)
-    (s, b, if (spec.sampleRate > 0) spec.sampleRate else 1000.0)
+    (s, b, if (spec.sampleRate > 0) spec.sampleRate else TransformSpec.DefaultRate)
   }
 
   /** position (long/int column) -> integer ns at `rate` positions/sec. */

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.SummaryType
-import graft.sinks.{CsvSink, JsonSink}
+import graft.sinks.{CsvSink, JsonSink, MidiSink, Output, RdfSink, XmlSink}
 import graft.sources.Tables
 
 /** spark-submit entry point mirroring the reference CLI surface
@@ -14,7 +14,7 @@ import graft.sources.Tables
   *     --input PATH [--recursive] [--manifest PATH]
   *     --transforms FILE[.json|.xml] (repeatable)
   *     [--default-transform PLUGIN[:OUTPUT]]          (-d)
-  *     --writer csv|jams|xml|parquet --output PATH
+  *     --writer csv|jams|rdf|midi|xml|parquet --output PATH
   *     [--summaries s1,s2] [--summary-only]           (-S)
   *     [--segments a,b,...] [--segments-from FILE]
   *     [--normalize]                                  (-n)
@@ -25,8 +25,10 @@ import graft.sources.Tables
   *     [--list] [--skeleton PLUGIN]
   *
   * Construction order mirrors the reference lifecycle (SURVEY.md §3):
-  * parse CLI -> writer pre-flight -> transform compile -> source
+  * parse CLI -> transform compile -> destination pre-flight -> source
   * expansion -> one shared-scan DAG -> extract -> summaries -> flush.
+  * Every writer refuses an existing output unless --force or --append
+  * ([[graft.sinks.Output]]).
   * A run that writes features AND summaries (no --summary-only, no
   * --checkpoint-buckets) materializes the extracted features once and
   * feeds both sinks from those rows.
@@ -76,7 +78,8 @@ object Main {
       |  [--segments a,b,...] [--segments-from FILE]
       |  [--normalize] [--multiplex]
       |  [--one-file] [--force] [--append] [--omit-filename]
-      |  [--distributed-files]   (executor-direct per-track writes, >10^4 files)
+      |      (every writer refuses an existing output unless --force
+      |      replaces it or --append adds to it)
       |  [--fill-ends] [--end-times] [--sample-timing]
       |  [--digits N] [--separator C]
       |  [--checkpoint-buckets N]
@@ -139,8 +142,6 @@ object Main {
       case "--append" :: t => loop(t, c.copy(csv = c.csv.copy(append = true)))
       case "--omit-filename" :: t =>
         loop(t, c.copy(csv = c.csv.copy(omitFilename = true)))
-      case "--distributed-files" :: t =>
-        loop(t, c.copy(csv = c.csv.copy(distributedFiles = true)))
       case "--fill-ends" :: t => loop(t, c.copy(csv = c.csv.copy(fillEnds = true)))
       case "--end-times" :: t => loop(t, c.copy(csv = c.csv.copy(endTimes = true)))
       case "--sample-timing" :: t =>
@@ -264,13 +265,25 @@ object Main {
     // opening — a missing input path must not mask a transform mistake)
     val specs = loadSpecs(c)
     require(specs.nonEmpty, "no transforms given (--transforms/--default-transform)")
-
-    var seqs =
-      if (c.recursive) Tables.sequencesRecursive(spark, c.input)
-      else Tables.sequences(spark, c.input)
-    c.manifest.foreach { m =>
-      seqs = Tables.fromManifest(seqs, spark.read.parquet(m))
+    val policy = c.csv.policy
+    val wantSummaries = specs.exists(_.summaryType.nonEmpty)
+    val writesFeatures = !c.summaryOnly || !wantSummaries
+    val summariesTarget = if (c.summaryOnly) c.output
+      else c.output.stripSuffix(".csv") + "_summaries.csv"
+    // K9: fixed destinations fail before extraction; the per-file writers
+    // check each name before their first write; bucket runs resume
+    val featuresTarget = c.writer match {
+      case "csv" if c.oneFile => Some(c.output)
+      case "parquet" if c.checkpointBuckets == 0 => Some(c.output)
+      case "jams" | "rdf" | "xml" => Some(c.output)
+      case "csv" | "midi" | "parquet" => None
+      case w => throw new IllegalArgumentException(s"unknown writer: $w")
     }
+    (featuresTarget.filter(_ => writesFeatures) ++
+      Some(summariesTarget).filter(_ => wantSummaries))
+      .foreach(Output.requireFree(spark, _, policy))
+
+    var seqs = sources(spark, c)
     if (c.multiplex) {
       // reference --multiplex (runner/main.cpp:1158-1167): all selected
       // sources become ONE multi-channel input; we zip + mean-mixdown.
@@ -316,7 +329,6 @@ object Main {
             .otherwise(col("values")))
         .drop("__peak")
     }
-    val wantSummaries = specs.exists(_.summaryType.nonEmpty)
     // Catalyst does not fuse separate actions: a run that writes the
     // features AND summarizes them would extract every sharing pass twice.
     // Materialize once and feed both sinks the same rows, as the
@@ -332,11 +344,11 @@ object Main {
     // ONE scan of seqs for all K specs: the per-spec rates ride in a
     // literal struct array exploded per row (a K-way union re-scanned
     // the table once per spec — review finding).
+    val rates = specs.map(sp => sp.id -> Engine.registry(sp.plugin).resolve(sp)._3).toMap
     def inputEnds(): DataFrame = {
       val perSpec = array(specs.map { sp =>
-        val (_, _, rate) = Engine.registry(sp.plugin).resolve(sp)
         struct(lit(sp.id).as("transform_id"),
-          lit(1e9 / rate).as("ns_per_pos"))
+          lit(1e9 / rates(sp.id)).as("ns_per_pos"))
       }: _*)
       seqs.select(col("doc_id").cast("string").as("doc_id"),
           col("n_tok"), explode(perSpec).as("sp"))
@@ -365,7 +377,7 @@ object Main {
             features.where(Checkpoint.bucketOf("doc_id", c.checkpointBuckets) === b)
           }
           ()
-        } else features.write.mode(if (c.csv.force) "overwrite" else "errorifexists")
+        } else features.write.mode(Output.saveMode(policy))
           // K5 layout analog: the reference AudioDB writer emits one file
           // per (track, output) (runner/AudioDBFeatureWriter.cpp:107-218);
           // hive-partitioning by (transform, output) gives one DIRECTORY
@@ -374,19 +386,17 @@ object Main {
           .parquet(c.output)
       case "csv" =>
         val lines = CsvSink.formatFeatures(
-          features.withColumn("doc_id", col("doc_id").cast("string")), c.csv)
-        if (c.oneFile) CsvSink.writeOneFile(lines, c.output, c.csv)
-        else if (c.csv.distributedFiles) {
-          // >10^4-file corpora: executor-direct writes, nothing
-          // (contents OR name list) materializes on the driver
-          CsvSink.writePerTrackDistributed(lines, c.output, c.csv); ()
-        } else { CsvSink.writePerTrack(lines, c.output, c.csv); () }
-      case "jams" => JsonSink.writeJsonl(
-        features.withColumn("doc_id", col("doc_id").cast("string")), c.output,
-        specs = resolvedSpecs(), digits = c.csv.digits,
-        inputEnds = Some(inputEnds()),
-        versions = specs.flatMap(sp => Engine.registry.get(sp.plugin)
-          .map(ex => sp.id -> ex.version.toString)).toMap)
+          features.withColumn("doc_id", col("doc_id").cast("string")), c.csv, rates)
+        if (c.oneFile) Output.oneFile(lines, c.output, policy)
+        else Output.filePerKey(CsvSink.trackFiles(lines), c.output, policy)
+      case "jams" =>
+        // JSONL, one document per line across the plan's part files: a
+        // one-task funnel would be the sink bottleneck at corpus scale
+        JsonSink.toJams(features.withColumn("doc_id", col("doc_id").cast("string")),
+          resolvedSpecs(), c.csv.digits, Some(inputEnds()),
+          specs.flatMap(sp => Engine.registry.get(sp.plugin)
+            .map(ex => sp.id -> ex.version.toString)).toMap)
+          .select("jams").write.mode(Output.saveMode(policy)).text(c.output)
       case "rdf" =>
         // dense (one-sample-per-step) outputs take the windowed-timeline
         // value-matrix form, sparse outputs stay timed events — the
@@ -403,23 +413,20 @@ object Main {
             }
           }
         }.toMap
-        graft.sinks.RdfSink.writeTurtle(
+        RdfSink.writeTurtle(
           features.withColumn("doc_id", col("doc_id").cast("string")),
-          specs, c.output, c.csv, dense)
+          specs, c.output, policy, dense)
       case "midi" =>
-        graft.sinks.MidiSink.writeMidPerDoc(
-          graft.sinks.MidiSink.toNotes(
-            features.withColumn("doc_id", col("doc_id").cast("string")),
-            unitIsHz = false),
-          c.output)
-        ()
+        Output.filePerKey(MidiSink.docFiles(MidiSink.toNotes(
+          features.withColumn("doc_id", col("doc_id").cast("string")),
+          unitIsHz = false)), c.output, policy)
       case "xml" =>
-        graft.sinks.XmlSink.toXmlRows(features).select("xml")
-          .coalesce(1).write.mode("overwrite").text(c.output)
-      case w => throw new IllegalArgumentException(s"unknown writer: $w")
+        Output.oneFile(XmlSink.toXmlRows(features).select(
+          col("doc_id").cast("string").as("doc_id"), col("transform_id"),
+          col("ts"), col("xml").as("line")), c.output, policy)
     }
 
-    if (!c.summaryOnly || !wantSummaries) writeFeatures()
+    if (writesFeatures) writeFeatures()
     if (wantSummaries) {
       // the reference extends the final durationless feature to the end
       // of the input, not just to the last feature
@@ -428,10 +435,16 @@ object Main {
         specs, c.segments, Some(inputEnds()))
       val lines = CsvSink.formatSummaries(
         sums.withColumn("doc_id", col("doc_id").cast("string")), c.csv)
-      val target = if (c.summaryOnly) c.output
-        else c.output.stripSuffix(".csv") + "_summaries.csv"
-      CsvSink.writeOneFile(lines, target, c.csv)
+      Output.oneFile(lines, summariesTarget, policy)
     }
+  }
+
+  /** The `--input` selection, recursive or not, narrowed by `--manifest`. */
+  private def sources(spark: SparkSession, c: Config): DataFrame = {
+    val all =
+      if (c.recursive) Tables.sequencesRecursive(spark, c.input)
+      else Tables.sequences(spark, c.input)
+    c.manifest.fold(all)(m => Tables.fromManifest(all, spark.read.parquet(m)))
   }
 
   /** `--contamination-check BENCH_PATH` (VERDICT r4 #7): the train/test
@@ -447,12 +460,7 @@ object Main {
     * `<output>_contamination`. */
   private def runContamination(spark: SparkSession, c: Config): Unit = {
     import graft.operators.Dedup
-    var corpus =
-      if (c.recursive) Tables.sequencesRecursive(spark, c.input)
-      else Tables.sequences(spark, c.input)
-    c.manifest.foreach { m =>
-      corpus = Tables.fromManifest(corpus, spark.read.parquet(m))
-    }
+    val corpus = sources(spark, c)
     val bench = Tables.sequences(spark, c.contaminationCheck.get)
     val exact = Dedup.exactMatchesAcross(corpus, bench, "doc_id", "tokens")
       .withColumn("est_jaccard", lit(1.0))
@@ -467,7 +475,7 @@ object Main {
         col("n_matches"), col("max_est_jaccard"),
         transform(col("matched_ids"), i => i.cast("string"))
           .as("matched_ids"))).as("line"))
-    val mode = if (c.csv.force) "overwrite" else "errorifexists"
+    val mode = Output.saveMode(c.csv.policy)
     val reportPath =
       if (c.dropContaminated) c.output.stripSuffix("/") + "_contamination"
       else c.output
@@ -492,7 +500,7 @@ object Main {
     require(df.columns.contains(c.redactColumn),
       s"--redact: input has no '${c.redactColumn}' column " +
         s"(columns: ${df.columns.mkString(", ")})")
-    val mode = if (c.csv.force) "overwrite" else "errorifexists"
+    val mode = Output.saveMode(c.csv.policy)
     graft.operators.Redact.redact(df, c.redactColumn)
       .write.mode(mode).parquet(c.output)
   }
@@ -514,7 +522,7 @@ object Main {
     val segs = df.select(col(c.keyColumn),
       fsplit(col(c.redactColumn),
         java.util.regex.Pattern.quote(c.segmentDelimiter)).as("__segs"))
-    val mode = if (c.csv.force) "overwrite" else "errorifexists"
+    val mode = Output.saveMode(c.csv.policy)
     // empty/whitespace-only segments are EXEMPT from the election:
     // Spark's split keeps empty strings, so without the exemption every
     // blank line (and trailing-newline empty segment) beyond the first
@@ -537,7 +545,7 @@ object Main {
     require(df.columns.contains(c.keyColumn),
       s"--epoch-shuffle: input has no '${c.keyColumn}' column " +
         s"(columns: ${df.columns.mkString(", ")})")
-    val mode = if (c.csv.force) "overwrite" else "errorifexists"
+    val mode = Output.saveMode(c.csv.policy)
     graft.operators.Sampling
       .epochShuffle(df, c.keyColumn, c.epochShuffle.get, c.batchSize)
       .write.mode(mode).parquet(c.output)

@@ -115,6 +115,9 @@ final case class TransformSpec(
 }
 
 object TransformSpec {
+  /** Positions per second of a transform that sets no `sample_rate`. */
+  val DefaultRate = 1000.0
+
   /** Deterministic ordering mirroring the reference's ordered Transform keys
     * (reproducible runs, FeatureExtractionManager.h:100-108). */
   implicit val ordering: Ordering[TransformSpec] =

@@ -135,14 +135,4 @@ object JsonSink {
           array_join(transform(col("rows"), r => r("o")), ", "),
           lit(" ] } ] }")).as("jams"))
   }
-
-  /** JSONL write, one document per line across however many part files
-    * the plan produces — a single-task `coalesce(1)` funnel would be the
-    * sink bottleneck at corpus scale; JSONL consumers glob parts. */
-  def writeJsonl(features: DataFrame, path: String,
-      specs: Seq[TransformSpec] = Nil, digits: Int = 6,
-      inputEnds: Option[DataFrame] = None,
-      versions: Map[String, String] = Map.empty): Unit =
-    toJams(features, specs, digits, inputEnds, versions).select("jams")
-      .write.mode("overwrite").text(path)
 }

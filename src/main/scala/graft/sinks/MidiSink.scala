@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.Scalars
 
@@ -10,9 +10,8 @@ import graft.functions.Scalars
   * unit is "Hz" (`:99-101,124-126`) — value[1] (if present, in 0..1) the
   * velocity (default 100, `:131-135`), and transforms map to channels
   * (≤16, `:108-116`). [[toNotes]] is the distributed projection;
-  * [[writeMidPerDoc]] encodes real format-0 .mid files (one per doc,
-  * streamed to the driver one doc at a time via toLocalIterator, like
-  * CsvSink.writePerTrack).
+  * [[docFiles]] encodes real format-0 .mid files, one per doc, in the
+  * tasks that [[Output.filePerKey]] writes them from.
   */
 object MidiSink {
 
@@ -66,34 +65,24 @@ object MidiSink {
     out.toByteArray
   }
 
-  /** Write one `<doc>.mid` per doc under `basedir` from a [[toNotes]]
-    * table. Streams the grouped table with toLocalIterator (the
-    * CsvSink.writePerTrack pattern): the driver holds ONE doc's note
-    * list at a time, not the whole corpus — the round-2 cut collected
-    * every doc's notes in a single collect(), the exact all-files
-    * driver peak the CSV sink had just removed. */
-  def writeMidPerDoc(notes: DataFrame, basedir: String): Seq[String] = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(basedir))
-    val grouped = notes
-      .groupBy(col("doc_id"))
+  /** One (key, name, body) row per doc for [[Output.filePerKey]]: the
+    * doc's notes from a [[toNotes]] table encoded as `<doc>.mid` inside
+    * the task. */
+  def docFiles(notes: DataFrame): DataFrame = {
+    val spark = notes.sparkSession
+    import spark.implicits._
+    notes.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(
         col("ts"), col("duration"), col("channel"),
         col("pitch"), col("velocity")))).as("ns"))
-      .persist()
-    try {
-      val written = scala.collection.mutable.ListBuffer.empty[String]
-      grouped.toLocalIterator().forEachRemaining { r =>
+      .map { r =>
         val doc = r.getString(0)
-        val ns = r.getSeq[org.apache.spark.sql.Row](1).map { n =>
+        val ns = r.getSeq[Row](1).map { n =>
           (n.getLong(0), Option(n.get(1)).map(_.asInstanceOf[Long]),
             n.getInt(2), n.getInt(3), n.getInt(4))
         }
-        val f = java.nio.file.Paths.get(basedir, s"$doc.mid")
-        java.nio.file.Files.write(f, encodeSmf(ns.toSeq))
-        written += f.toString
-      }
-      written.sorted.toSeq
-    } finally grouped.unpersist()
+        (s"doc $doc", s"$doc.mid", encodeSmf(ns.toSeq))
+      }.toDF("key", "name", "body")
   }
 
   /** features: (doc_id, transform_id, ts, duration, values, label) ->

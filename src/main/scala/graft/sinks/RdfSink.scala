@@ -180,7 +180,7 @@ object RdfSink {
     * [[formatDenseFeatures]]; everything else stays a sparse timed event
     * (the reference routes per output descriptor the same way). */
   def writeTurtle(features: DataFrame, specs: Seq[TransformSpec],
-      path: String, opts: CsvSink.Options,
+      path: String, policy: Output.Policy,
       dense: Map[String, (Int, Int, Double)] = Map.empty): Unit = {
     val header = features.sparkSession
       .createDataFrame(Seq(("", "", -2L, prefixes + "\n" + transformBlocks(specs) + "\n")))
@@ -209,6 +209,6 @@ object RdfSink {
       if (denseIds.isEmpty) Some(formatFeatures(features))
       else Some(formatFeatures(sparseFeat))
     val parts = Seq(header) ++ denseOnlySignals ++ sparsePart ++ denseParts
-    CsvSink.writeOneFile(parts.reduce(_.unionByName(_)), path, opts)
+    Output.oneFile(parts.reduce(_.unionByName(_)), path, policy)
   }
 }

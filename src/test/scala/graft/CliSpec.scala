@@ -241,20 +241,122 @@ class CliSpec extends AnyFunSuite {
       Set("doc_0000000001", "doc_0000000002"))
   }
 
-  test("--distributed-files routes the csv writer to the executor-direct tier") {
-    val tf = tmp("grafttfdist") + "/t.json"
+  /** What a writer left at `out`, comparable across runs: each file's
+    * bytes by relative path, except Spark part files (named per run),
+    * compared as their sorted lines or, for parquet, sorted rows. */
+  private def snapshot(out: String): Map[String, String] = {
+    val root = Paths.get(out)
+    def text(f: java.nio.file.Path) =
+      new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.ISO_8859_1)
+    if (Files.isRegularFile(root)) return Map("" -> text(root))
+    val files = scala.util.Using.resource(Files.walk(root)) {
+      _.toArray.map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isRegularFile(_)).toSeq
+    }
+    val parts = files.filter(_.getFileName.toString.startsWith("part-"))
+    if (parts.exists(_.toString.endsWith(".parquet")))
+      Map("rows" -> spark.read.parquet(out).collect().map(_.toString).sorted.mkString("\n"))
+    else if (parts.nonEmpty)
+      Map("lines" -> parts.flatMap(f => text(f).split("\n")).sorted.mkString("\n"))
+    else files.map(f => root.relativize(f).toString -> text(f)).toMap
+  }
+
+  /** Overwrite `out`, or its first data file, with junk. */
+  private def tamper(out: String): Unit = {
+    val root = Paths.get(out)
+    val target =
+      if (Files.isRegularFile(root)) root
+      else scala.util.Using.resource(Files.walk(root)) {
+        _.toArray.map(_.asInstanceOf[java.nio.file.Path])
+          .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.matches("[._].*"))
+          .minBy(_.toString)
+      }
+    Files.writeString(target, "junk\n")
+  }
+
+  test("every writer refuses an existing output, --force replaces it, csv --append appends") {
+    val tf = tmp("grafttfw") + "/t.json"
+    Files.writeString(Paths.get(tf), """[{"id": "r", "plugin": "graft:regions"}]""")
+    // (writer arguments, output name, appends)
+    val writers = Seq(
+      (Seq("--writer", "csv"), "tracks", true),
+      (Seq("--writer", "csv", "--one-file"), "out.csv", true),
+      (Seq("--writer", "jams"), "out.jsonl", false),
+      (Seq("--writer", "xml"), "out.xml", false),
+      (Seq("--writer", "midi"), "mid", false),
+      (Seq("--writer", "rdf"), "out.n3", false),
+      (Seq("--writer", "parquet"), "pq", false))
+    writers.foreach { case (writer, name, appends) =>
+      val label = writer.mkString(" ")
+      val out = tmp("graftw") + "/" + name
+      def run(more: String*): Unit = Main.run(spark, Main.parseArgs(Seq(
+        "--input", inputPath, "--transforms", tf, "--output", out) ++ writer ++ more))
+      run()
+      val first = snapshot(out)
+      assert(first.nonEmpty && first.values.forall(_.nonEmpty), label)
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("exists"), s"$label: ${e.getMessage}")
+      assert(snapshot(out) == first, s"$label: a refused run changed the output")
+      tamper(out)
+      run("--force")
+      assert(snapshot(out) == first, s"$label: --force did not replace the output")
+      if (appends) {
+        run("--append")
+        assert(snapshot(out) == first.map { case (k, v) => k -> (v + v) }, label)
+      }
+    }
+  }
+
+  test("per-track csv --append, run twice: each file holds run 1's lines, then run 2's") {
+    val tf = tmp("grafttfap") + "/t.json"
     Files.writeString(Paths.get(tf),
-      """[{"id": "clicks", "plugin": "graft:clicks"}]""")
-    val out = tmp("graftoutdist")
+      """[{"id": "df", "plugin": "graft:energy", "output": "detectionfunction"}]""")
+    def run(out: String, more: String*): Unit = Main.run(spark, Main.parseArgs(Seq(
+      "--input", inputPath, "--transforms", tf, "--writer", "csv",
+      "--output", out) ++ more))
+    val (run1, run2, appended) = (tmp("graftap1"), tmp("graftap2"), tmp("graftap"))
+    run(run1)
+    run(run2, "--digits", "2")
+    run(appended, "--append")
+    run(appended, "--append", "--digits", "2")
+    val (s1, s2) = (snapshot(run1), snapshot(run2))
+    assert(s1.size == 20 && s1 != s2)
+    assert(snapshot(appended) == s1.map { case (k, v) => k -> (v + s2(k)) })
+  }
+
+  test("K9: an existing summaries file fails the run before features are written") {
+    val tf = tmp("grafttfk9") + "/t.json"
+    Files.writeString(Paths.get(tf),
+      """[{"id": "df", "plugin": "graft:energy", "output": "detectionfunction"}]""")
+    val out = tmp("graftk9") + "/feat.csv"
+    val sums = Paths.get(out.stripSuffix(".csv") + "_summaries.csv")
+    Files.writeString(sums, "old\n")
+    val e = intercept[IllegalStateException] {
+      Main.run(spark, Main.parseArgs(Seq(
+        "--input", inputPath, "--transforms", tf, "--writer", "csv", "--one-file",
+        "--summaries", "mean", "--output", out)))
+    }
+    assert(e.getMessage.contains("_summaries.csv exists"), e.getMessage)
+    assert(!Files.exists(Paths.get(out)), "features written before the refusal")
+    assert(Files.readString(sums) == "old\n")
+  }
+
+  test("--sample-timing prints positions at the transform's sample_rate") {
+    val tf = tmp("grafttfst") + "/t.json"
+    Files.writeString(Paths.get(tf),
+      """[{"id": "clicks", "plugin": "graft:clicks", "sample_rate": 2000}]""")
+    val out = tmp("graftst")
     Main.run(spark, Main.parseArgs(Seq(
-      "--input", inputPath, "--transforms", tf, "--distributed-files",
-      "--writer", "csv", "--output", out, "--force")))
-    val f = Paths.get(s"$out/doc_0000000001_clicks.csv")
-    assert(Files.exists(f))
-    assert(Files.readAllLines(f).size() == 3) // same content as default tier
-    // no .crc sidecars next to the user files
-    assert(!Files.list(Paths.get(out)).toArray.map(_.toString)
-      .exists(_.endsWith(".crc")))
+      "--input", inputPath, "--transforms", tf, "--writer", "csv",
+      "--sample-timing", "--output", out)))
+    val tokens = Tables.sequences(spark, inputPath)
+      .where(col("doc_id") === "doc_0000000001").select("tokens").as[Seq[Int]].head()
+    val positions = tokens.indices.filter(tokens(_) == SequenceGen.ClickToken)
+    val lines = scala.jdk.CollectionConverters.ListHasAsScala(
+      Files.readAllLines(Paths.get(s"$out/doc_0000000001_clicks.csv"))).asScala.toSeq
+    assert(positions.size == 3)
+    assert(lines == positions.zipWithIndex.map { case (p, i) =>
+      (if (i == 0) "\"doc_0000000001\"" else "") + s",$p,\"click\""
+    })
   }
 
   test("S4 URL source: a file:// URL drives the CLI end-to-end") {

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sinks.{CsvSink, JsonSink}
+import graft.sinks.{CsvSink, JsonSink, MidiSink, Output}
 
 class SinksSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -186,72 +186,110 @@ class SinksSpec extends AnyFunSuite {
     assert(lines(0) == "\"d\",0.000000000,1.5,,2.5")
   }
 
+  /** (doc, transform) curve rows: two per doc, `n` docs. */
+  private def tracks(n: Int) = (0 until n).flatMap { i =>
+    Seq((f"doc_$i%03d", "t1", 0L, None: Option[Long], Seq(1.0f), ""),
+      (f"doc_$i%03d", "t1", S, None: Option[Long], Seq(2.0f), ""))
+  }.toDF("doc_id", "transform_id", "ts", "duration", "values", "label")
+
+  /** Names of the files in `dir`, sorted. */
+  private def listNames(dir: String): Seq[String] =
+    scala.util.Using.resource(Files.list(Paths.get(dir))) {
+      _.toArray.map(p => Paths.get(p.toString).getFileName.toString).sorted.toSeq
+    }
+
   test("per-track write of >100 tracks runs O(partitions) jobs, not O(tracks)") {
-    val n = 120
-    val df = (0 until n).flatMap { i =>
-      Seq((f"doc_$i%03d", "t1", 0L, None: Option[Long], Seq(1.0f), ""),
-        (f"doc_$i%03d", "t1", S, None: Option[Long], Seq(2.0f), ""))
-    }.toDF("doc_id", "transform_id", "ts", "duration", "values", "label")
-    val lines = CsvSink.formatFeatures(df, CsvSink.Options())
-    val out = Files.createTempDirectory("graftmany").toString
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    /** jobs started by one per-track write of `n` tracks */
+    def jobsFor(n: Int, out: String): Int = {
+      val lines = CsvSink.formatFeatures(tracks(n), CsvSink.Options())
+      org.apache.spark.grafttest.ListenerBus.drain(spark.sparkContext)
+      val before = jobs.get()
+      assert(Output.filePerKey(CsvSink.trackFiles(lines), out, Output.Policy()) == n)
+      org.apache.spark.grafttest.ListenerBus.drain(spark.sparkContext)
+      jobs.get() - before
+    }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      val written = CsvSink.writePerTrack(lines, out, CsvSink.Options())
-      // listener events are async; wait for the count to go stable
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        if (jobs.get() == last) stable += 1 else { last = jobs.get(); stable = 0 }
-      }
-      assert(written.size == n)
-      // Two actions over the persisted grouped table: the K9 name-only
-      // collect (AQE adds a shuffle-stage job) plus toLocalIterator,
-      // which launches ONE JOB PER PARTITION (4 here) so the driver
-      // holds one file's content at a time. The regression target is
-      // jobs bounded by partitions, never by track count (round 1 ran
-      // one job PER PAIR: 120 tracks -> 121+ jobs).
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      assert(jobs.get() <= 4 + parts,
-        s"writePerTrack must be O(partitions) jobs, saw ${jobs.get()} for $n tracks")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val out = Files.createTempDirectory("graftmany").toString
+    val (few, many) =
+      try (jobsFor(12, Files.createTempDirectory("graftfew").toString), jobsFor(120, out))
+      finally spark.sparkContext.removeSparkListener(listener)
+    // pin + name check + write: a fixed number of jobs whatever the
+    // track count (round 1 ran one job per track: 120 tracks -> 121+)
+    assert(many == few, s"$few jobs for 12 tracks, $many for 120")
+    assert(listNames(out).size == 120)
     val lines0 = Files.readAllLines(Paths.get(s"$out/doc_000_t1.csv"))
     assert(lines0.size() == 2)
     assert(lines0.get(0) == "\"doc_000\",0.000000000,1")
     assert(lines0.get(1) == ",1.000000000,2")
   }
 
-  test("distributed per-track tier: executor-direct writes, no driver rows") {
+  test("per-file writer: executor-direct writes, K9 pre-flight, force rewrites") {
     val n = 300
-    val df = (0 until n).flatMap { i =>
-      Seq((f"doc_$i%03d", "t1", 0L, None: Option[Long], Seq(1.0f), ""),
-        (f"doc_$i%03d", "t1", S, None: Option[Long], Seq(2.0f), ""))
-    }.toDF("doc_id", "transform_id", "ts", "duration", "values", "label")
-    val lines = CsvSink.formatFeatures(df, CsvSink.Options())
+    val files = CsvSink.trackFiles(CsvSink.formatFeatures(tracks(n), CsvSink.Options()))
     val out = Files.createTempDirectory("graftdist").toString
-    // the tier never runs collect()/toLocalIterator on contents: count
-    // driver-fetched result rows via a listener on completed jobs
-    val count = CsvSink.writePerTrackDistributed(lines, out, CsvSink.Options())
-    assert(count == n)
+    assert(Output.filePerKey(files, out, Output.Policy()) == n)
     val f0 = Files.readAllLines(Paths.get(s"$out/doc_000_t1.csv"))
     assert(f0.size() == 2)
     assert(f0.get(0) == "\"doc_000\",0.000000000,1")
     assert(f0.get(1) == ",1.000000000,2")
-    assert(Files.list(Paths.get(out)).count() == n)
-    // K9 pre-flight (distributed): an existing destination fails fast
+    assert(listNames(out).size == n) // no .crc sidecars
+    // K9 pre-flight: an existing destination fails before any write
+    Files.writeString(Paths.get(s"$out/doc_299_t1.csv"), "junk\n")
     val e = intercept[IllegalStateException] {
-      CsvSink.writePerTrackDistributed(lines, out, CsvSink.Options())
+      Output.filePerKey(files, out, Output.Policy())
     }
     assert(e.getMessage.contains("exists"), e.getMessage)
-    // force overwrites idempotently (task-retry model)
-    assert(CsvSink.writePerTrackDistributed(lines, out,
-      CsvSink.Options(force = true)) == n)
+    assert(Files.readString(Paths.get(s"$out/doc_299_t1.csv")) == "junk\n")
+    // force replaces every file
+    assert(Output.filePerKey(files, out, Output.Policy(force = true)) == n)
     assert(Files.readAllLines(Paths.get(s"$out/doc_299_t1.csv")).size() == 2)
+  }
+
+  test("per-file writer: colliding or escaping names fail before any write, naming the keys") {
+    // transform ids p:x and p_x both name docA_p_x.csv
+    val collide = CsvSink.trackFiles(CsvSink.formatFeatures(
+      curve.withColumn("transform_id", lit("p:x"))
+        .unionByName(curve.withColumn("transform_id", lit("p_x"))), CsvSink.Options()))
+    val dir = Files.createTempDirectory("graftnames").toString
+    val e = intercept[IllegalArgumentException] {
+      Output.filePerKey(collide, dir, Output.Policy(force = true))
+    }
+    assert(e.getMessage.contains("docA_p_x.csv") && e.getMessage.contains("transform p:x") &&
+      e.getMessage.contains("transform p_x"), e.getMessage)
+    assert(listNames(dir).isEmpty)
+    // doc ids that are not one path component would write outside `dir`
+    Seq("a/b", "../escape").foreach { doc =>
+      val out = dir + "/sub"
+      val notes = Seq((doc, "t", 0, 0L, Some(S), 60, 100))
+        .toDF("doc_id", "transform_id", "channel", "ts", "duration", "pitch", "velocity")
+      val e2 = intercept[IllegalArgumentException] {
+        Output.filePerKey(MidiSink.docFiles(notes), out, Output.Policy(force = true))
+      }
+      assert(e2.getMessage.contains(s"doc $doc"), e2.getMessage)
+      assert(listNames(dir).isEmpty)
+    }
+  }
+
+  test("per-file writer: re-running a pinned row's write gives the same bytes") {
+    val dir = Files.createTempDirectory("graftretry")
+    val f = dir.resolve("d_t.csv")
+    Files.writeString(f, "run 1\n")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val path = new org.apache.hadoop.fs.Path(f.toUri)
+    val body = "run 2\n".getBytes("UTF-8")
+    // an append keeps the pinned pre-run length (6 bytes), however often
+    // the task that writes the row runs
+    (0 until 3).foreach { _ =>
+      Output.writeFile(fs, path, body, keep = 6L)
+      assert(Files.readString(f) == "run 1\nrun 2\n")
+    }
+    Output.writeFile(fs, path, body, keep = 0L)
+    assert(Files.readString(f) == "run 2\n")
   }
 
   test(".mid encoding round-trips through javax.sound.midi") {
@@ -263,9 +301,8 @@ class SinksSpec extends AnyFunSuite {
       .toDF("doc_id", "transform_id", "channel", "ts", "duration",
         "pitch", "velocity")
     val out = Files.createTempDirectory("graftmidi").toString
-    val written = graft.sinks.MidiSink.writeMidPerDoc(notes, out)
-    assert(written.map(p => Paths.get(p).getFileName.toString).sorted ==
-      Seq("d1.mid", "d2.mid"))
+    assert(Output.filePerKey(MidiSink.docFiles(notes), out, Output.Policy()) == 2)
+    assert(listNames(out) == Seq("d1.mid", "d2.mid")) // no .crc sidecars
     val seq1 = javax.sound.midi.MidiSystem.getSequence(
       new java.io.File(s"$out/d1.mid"))
     assert(seq1.getResolution == 480) // ticks per quarter
@@ -292,8 +329,8 @@ class SinksSpec extends AnyFunSuite {
     graft.engine.Main.run(spark, graft.engine.Main.parseArgs(Seq(
       "--input", in, "--transforms", tf, "--writer", "midi",
       "--output", out)))
-    val mids = new java.io.File(out).listFiles().filter(_.getName.endsWith(".mid"))
-    assert(mids.nonEmpty)
+    val mids = new java.io.File(out).listFiles()
+    assert(mids.nonEmpty && mids.forall(_.getName.endsWith(".mid"))) // no .crc
     val seq0 = javax.sound.midi.MidiSystem.getSequence(mids.head)
     assert(seq0.getResolution == 480)
   }
@@ -302,11 +339,11 @@ class SinksSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graftcsv2").toString
     val lines = CsvSink.formatFeatures(
       curve.withColumn("transform_id", lit("p:x:y")), CsvSink.Options())
-    val files = CsvSink.writePerTrack(lines, dir, CsvSink.Options())
+    Output.filePerKey(CsvSink.trackFiles(lines), dir, Output.Policy())
     // K8 naming: ':' -> '_'
-    assert(files == Seq(s"$dir/docA_p_x_y.csv"))
+    assert(listNames(dir) == Seq("docA_p_x_y.csv"))
     intercept[IllegalStateException] {
-      CsvSink.writePerTrack(lines, dir, CsvSink.Options())
+      Output.filePerKey(CsvSink.trackFiles(lines), dir, Output.Policy())
     }
   }
 
